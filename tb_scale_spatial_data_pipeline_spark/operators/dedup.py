@@ -251,6 +251,12 @@ def connected_components(
     small-star contraction (Kiveris et al., "Connected Components in
     MapReduce"), which this API could switch to without changing its
     contract.
+
+    Fixed cost per call: the per-round broadcast guard is bounded by
+    ``n_bound = 2 * e0.count()``, one extra (no-shuffle) job on the
+    materialized edges. It is paid on every call, also when the graph
+    is above the broadcast bound and both per-round joins run as
+    shuffles anyway.
     """
     from .spread import broadcast_if_small
 

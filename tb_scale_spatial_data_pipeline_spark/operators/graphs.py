@@ -20,12 +20,113 @@ COUNT is orientation-invariant; only the intermediate size changes.
 
 Reference parity: the reference has no graph engine; this backs the
 registry's `triangle_count` query (co-supplier graph).
+
+Within-group pairs (`co_occurrence_pairs`) are the edge source of every
+co-occurrence graph in the registry — suppliers sharing a part,
+customers sharing a part, parts sharing an order — built once per group
+as a sorted-array combination behind one per-group fan-out bound, and
+thinned to realistic sparsity by one md5 bucket predicate (`md5_thin`).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from .spread import full_width
+
+# Per-group fan-out bound for the within-group pair expansion. The
+# expansion's output is Θ(fanout²) per group key, all landing in ONE
+# task for that key — fine while the fixture is degree-homogeneous (max
+# 189 co-suppliers per part at sf0.1, PLANS.md), quadratic-in-one-task
+# at 100× if a hub group appears. The guard makes that assumption LOUD:
+# a size() check on the grouped member array raises instead of letting
+# a hot group melt an executor. Production mitigations once the bound
+# trips: salt the hot groups (replicate one side R ways, slice the
+# other — the salted_skew_join discipline) or degree-cap/sample per
+# group.
+_PK_FANOUT_BOUND = 4096
+
+# md5 bucket threshold that thins the co-supplier graph to realistic
+# sparsity: 9830/65536 ≈ 15% of pairs kept (the unthinned graph is
+# complete — every supplier pair shares some part in the fixture).
+EDGE_THIN_BELOW = 9830
+
+
+def md5_thin(mult: int, below: int) -> Column:
+    """Deterministic pair sample over (u, v): keep the pair iff the
+    first 4 hex digits of md5(str(u * mult + v)) are < `below` (of
+    65536). The SQL oracles spell the same predicate as
+    CAST(('0x' || substring(md5(...), 1, 4)) AS INTEGER) < below."""
+    bucket = F.conv(
+        F.substring(
+            F.md5((F.col("u") * mult + F.col("v")).cast("string")), 1, 4
+        ),
+        16,
+        10,
+    ).cast("int")
+    return bucket < below
+
+
+def co_occurrence_pairs(
+    df: DataFrame, group: str, member: str, *, weighted: bool = False
+) -> DataFrame:
+    """Distinct pairs (u, v), u < v, of `member` values that share a
+    `group` value; with weighted=True, (u, v, w) where w is the number
+    of groups the pair shares.
+
+    Sorted-array combination instead of a group self-join: each
+    group's distinct members become one sorted array, exploded as
+    (us[i], us[j>i]). The sorted array makes u < v structural and emits
+    each pair once per shared group (the self-join emitted both orders
+    and filtered half, 14M rows -> 7M on the co-supplier graph at
+    sf0.1), with two Generate operators instead of sort-merge-join
+    machinery, and the fan-out guard is a size() check on the
+    already-built array (census: pair production 5.2 -> 2.3 exec-sec,
+    §2.1/§2.3). Pair volume is Σ|group|², never |members|².
+
+    Explicit width on the grouping exchange: this small shuffle carries
+    the quadratic expansion downstream, so AQE's byte-based coalescing
+    would serialize it onto a handful of tasks (5 of 32 at sf0.1) —
+    the §2.5 parallelism-first case."""
+    elem = dict(df.dtypes)[member]
+    grouped = (
+        df.select(F.col(group).alias("pk"), F.col(member).alias("u"))
+        .repartition(full_width(df.sparkSession), "pk")
+        .groupBy("pk")
+        .agg(F.sort_array(F.collect_set("u")).alias("us"))
+    )
+    # the raise is folded into the exploded column so pruning cannot
+    # drop it. NOTE the shape: when(violated, raise_error).otherwise(col)
+    # — the tempting assert_true(...).isNull() form is erased by
+    # Catalyst (AssertTrue is NullType, so NullPropagation folds
+    # IsNull(it) to literal TRUE and the check vanishes).
+    guarded = grouped.select(
+        F.when(
+            F.size("us") > _PK_FANOUT_BOUND,
+            F.raise_error(
+                F.concat(
+                    F.lit(
+                        "within-group pair expansion: per-group fan-out "
+                        f"exceeds {_PK_FANOUT_BOUND} (got "
+                    ),
+                    F.size("us").cast("string"),
+                    F.lit("); salt or degree-cap hot groups before pairing"),
+                )
+            ).cast(f"array<{elem}>"),
+        )
+        .otherwise(F.col("us"))
+        .alias("us")
+    )
+    pairs = guarded.select(
+        F.posexplode("us").alias("i", "u"), F.col("us")
+    ).select(
+        "u",
+        F.explode(F.slice("us", F.col("i") + F.lit(2), F.size("us"))).alias("v"),
+    )
+    if weighted:
+        return pairs.groupBy("u", "v").agg(F.count(F.lit(1)).alias("w"))
+    return pairs.distinct()
 
 
 def vertex_degrees(edges: DataFrame) -> DataFrame:

@@ -20,6 +20,26 @@ def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return load_table(spark, sf_dir, name)
 
 
+def registry():
+    """One plan module's registry: ``QUERIES`` (name -> fn(spark,
+    sf_dir) -> DataFrame), ``ORACLES`` (name -> DuckDB SQL) and the
+    ``_q(name, oracle=None)`` decorator that fills both. Each module
+    binds its own pair: ``QUERIES, ORACLES, _q = registry()``."""
+    queries: dict = {}
+    oracles: dict = {}
+
+    def _q(name: str, oracle: str | None = None):
+        def deco(fn):
+            queries[name] = fn
+            if oracle is not None:
+                oracles[name] = oracle
+            return fn
+
+        return deco
+
+    return queries, oracles, _q
+
+
 def dsum(col: Column, scale: int = 2) -> Column:
     """Order-independent exact sum of a ≤`scale`-dp double column."""
     return F.sum(col.cast(f"decimal(18,{scale})")).cast("double")

@@ -26,20 +26,10 @@ import math as _math
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ._util import t
+from ..operators.graphs import co_occurrence_pairs
+from ._util import t, registry
 
-QUERIES: dict = {}
-ORACLES: dict = {}
-
-
-def _q(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
+QUERIES, ORACLES, _q = registry()
 
 
 _COOC_MIN_PAIRS = 3
@@ -56,20 +46,19 @@ def _basket_pairs(spark: SparkSession, sf_dir: str, min_co: int):
         # caller-side count all reuse the distinct baskets
     )
     deg = basket.groupBy("l_partkey").agg(F.count("*").alias("d"))
-    a = basket.select(
-        F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pa")
-    )
-    b = basket.select(
-        F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pb")
-    )
-    pairs = (
-        a.join(b, "ok")
-        .where(F.col("pa") < F.col("pb"))
-        .groupBy("pa", "pb")
-        .agg(F.count("*").alias("co"))
+    return basket, deg, _order_pairs(basket, min_co)
+
+
+def _order_pairs(basket: DataFrame, min_co: int) -> DataFrame:
+    """(pa, pb, co) part pairs sharing co >= min_co orders of the
+    distinct (l_orderkey, l_partkey) baskets."""
+    return (
+        co_occurrence_pairs(basket, "l_orderkey", "l_partkey", weighted=True)
+        .select(
+            F.col("u").alias("pa"), F.col("v").alias("pb"), F.col("w").alias("co")
+        )
         .where(F.col("co") >= min_co)
     )
-    return basket, deg, pairs
 
 
 
@@ -1662,15 +1651,7 @@ def q_ndcg_recommendations(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     deg = train_b.groupBy("l_partkey").agg(F.count(F.lit(1)).alias("d"))
-    a = train_b.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("pa"))
-    b = train_b.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("pb"))
-    pairs = (
-        a.join(b, "k")
-        .where(F.col("pa") < F.col("pb"))
-        .groupBy("pa", "pb")
-        .agg(F.count(F.lit(1)).alias("co"))
-        .where(F.col("co") >= _REC_MIN_CO)
-    )
+    pairs = _order_pairs(train_b, _REC_MIN_CO)
     da = deg.select(F.col("l_partkey").alias("pa"), F.col("d").alias("da"))
     db = deg.select(F.col("l_partkey").alias("pb"), F.col("d").alias("db"))
     sims = (

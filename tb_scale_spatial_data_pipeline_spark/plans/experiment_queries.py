@@ -23,20 +23,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ._util import t
+from ..operators.graphs import co_occurrence_pairs, md5_thin
+from ._util import t, registry
 
-QUERIES: dict = {}
-ORACLES: dict = {}
-
-
-def _q(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
+QUERIES, ORACLES, _q = registry()
 
 
 # ---------------------------------------------------------------------------
@@ -196,21 +186,7 @@ def q_kcore_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("o_custkey").alias("c"), F.col("l_partkey").alias("p"))
         .distinct()
     )
-    from .graph_queries import _guard_pk_fanout
-
-    a = _guard_pk_fanout(
-        cp.select(F.col("p").alias("pk"), F.col("c").alias("u")), "u"
-    )
-    b = cp.select(F.col("p").alias("pk"), F.col("c").alias("v"))
-    e0 = a.join(b, "pk").where(F.col("u") < F.col("v")).select("u", "v").distinct()
-    bucket = F.conv(
-        F.substring(
-            F.md5((F.col("u") * 100000 + F.col("v")).cast("string")), 1, 4
-        ),
-        16,
-        10,
-    ).cast("int")
-    eu = e0.where(bucket < _KCORE_THR)
+    eu = co_occurrence_pairs(cp, "p", "c").where(md5_thin(100000, _KCORE_THR))
     edges = (
         eu.select(F.col("u").alias("src"), F.col("v").alias("dst"))
         .unionByName(eu.select(F.col("v").alias("src"), F.col("u").alias("dst")))

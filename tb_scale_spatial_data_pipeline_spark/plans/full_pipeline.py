@@ -42,10 +42,10 @@ from ..operators.composites import argmax_composite, grouped_median
 from ..operators.relabel import solar_shadow_rules
 from ..raster.segmentation import segment_shape_metrics, segment_tiles
 from ..raster.tiles import halo_duplicate
+from ._util import registry
 from .checkpoint import stage, stage_root
 
-QUERIES: dict = {}
-ORACLES: dict = {}
+QUERIES, ORACLES, _q = registry()
 
 # Region layout per 32×32 tile (normal / mirrored for odd tile_x):
 #   band y+[0,12):  G 19×12 @x+0 (mirr @x+13), H 13×12 @x+19 (mirr @x+0)
@@ -220,16 +220,6 @@ def run_full_pipeline(
 
     objects = stage(spark, f"{root}/e4_objects", _build_objects)
     return objects.orderBy("segment_key")
-
-
-def _q(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
 
 
 # Labels: J (23×20, area 460 > 300) → 1; G (19×12, elong 19/12 ≈ 1.583

@@ -18,21 +18,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.spread import broadcast_if_small, full_width
-from ._util import t
+from ..operators.graphs import EDGE_THIN_BELOW, co_occurrence_pairs, md5_thin
+from ..operators.spread import broadcast_if_small
+from ._util import t, registry
 
-QUERIES: dict = {}
-ORACLES: dict = {}
-
-
-def _q(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
+QUERIES, ORACLES, _q = registry()
 
 
 # The same md5-sampled co-supplier edge set as triangle_count
@@ -62,108 +52,8 @@ _PR_ITERS = 10
 _PR_DAMP = 0.85
 
 
-# Per-part fan-out bound for the co-supply pk self-join. The join's
-# output is Θ(fanout²) per part key, all landing in ONE task for that
-# key — fine while the fixture is degree-homogeneous (max 189 co-
-# suppliers per part at sf0.1, PLANS.md), quadratic-in-one-task at
-# 100× if a hub part appears. The guard below makes that assumption
-# LOUD: an assert_true threaded through the kept column raises at the
-# scan that feeds the self-join instead of letting a hot part melt an
-# executor. Production mitigations once the bound trips: salt the hot
-# parts (replicate one side R ways, slice the other — the
-# salted_skew_join discipline) or degree-cap/sample per part.
-_PK_FANOUT_BOUND = 4096
-
-
-def _guard_pk_fanout(ps: DataFrame, keep: str) -> DataFrame:
-    """Return `ps` (columns pk, `keep`) with the per-pk fan-out bound
-    pinned in the dataflow. The count is a pk-PARTITIONED window, not
-    a groupBy+join: the window's hash exchange on pk is the very
-    exchange the downstream self-join needs, so Spark reuses it and
-    the guard's marginal cost is one within-partition count (measured
-    ~2x cheaper than the join form on ktruss_peeling). The raise is
-    folded into the kept column so column pruning cannot silently
-    drop the check."""
-    from pyspark.sql import Window
-
-    fanout = F.count(F.lit(1)).over(Window.partitionBy("pk"))
-    # NOTE the shape: when(violated, raise_error).otherwise(col). The
-    # tempting assert_true(...).isNull() form is erased by Catalyst —
-    # AssertTrue is NullType, so NullPropagation folds IsNull(it) to
-    # literal TRUE and the check vanishes (observed, not theoretical).
-    guarded = (
-        F.when(
-            F.col("_pk_fanout") > _PK_FANOUT_BOUND,
-            F.raise_error(
-                F.concat(
-                    F.lit(
-                        "co-supply pk self-join: per-part fan-out exceeds "
-                        f"{_PK_FANOUT_BOUND} (got "
-                    ),
-                    F.col("_pk_fanout").cast("string"),
-                    F.lit("); salt or degree-cap hot parts before pairing"),
-                )
-            ).cast(dict(ps.dtypes)[keep]),
-        )
-        .otherwise(F.col(keep))
-        .alias(keep)
-    )
-    return ps.select("pk", F.col(keep), fanout.alias("_pk_fanout")).select(
-        "pk", guarded
-    )
-
-
 def _undirected_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     ps = t(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey").distinct()
-    # Pair fan-out as a per-part sorted-array combination expansion
-    # instead of a pk self-join: group each part's distinct suppliers
-    # into one sorted array, then explode (us[i], us[j>i]). Same pair
-    # SET as the join form — the sorted array makes u < v structural —
-    # but each u<v pair is produced exactly once (the join emitted both
-    # orders and filtered half, 14M rows -> 7M here at sf0.1) with two
-    # Generate operators instead of sort-merge-join machinery, and the
-    # window-count fan-out guard collapses to a size() check on the
-    # already-built array (one stage and one 590k-row exchange fewer;
-    # census: pair production 5.2 -> 2.3 exec-sec, §2.1/§2.3).
-    # Explicit width on the grouping exchange: this ~10 MB shuffle
-    # carries the ~24x quadratic expansion downstream, so AQE's
-    # byte-based coalescing would serialize it onto a handful of tasks
-    # (5 of 32 at sf0.1) — the §2.5 parallelism-first case.
-    _w = full_width(spark)
-    _elem = dict(ps.dtypes)["l_suppkey"]
-    grouped = (
-        ps.select(F.col("l_partkey").alias("pk"), F.col("l_suppkey").alias("u"))
-        .repartition(_w, "pk")
-        .groupBy("pk")
-        .agg(F.sort_array(F.collect_set("u")).alias("us"))
-    )
-    # same LOUD per-part fan-out bound as before (see _PK_FANOUT_BOUND):
-    # the raise is folded into the exploded column so pruning cannot
-    # drop it.
-    guarded = grouped.select(
-        F.when(
-            F.size("us") > _PK_FANOUT_BOUND,
-            F.raise_error(
-                F.concat(
-                    F.lit(
-                        "co-supply pk self-join: per-part fan-out exceeds "
-                        f"{_PK_FANOUT_BOUND} (got "
-                    ),
-                    F.size("us").cast("string"),
-                    F.lit("); salt or degree-cap hot parts before pairing"),
-                )
-            ).cast(f"array<{_elem}>"),
-        )
-        .otherwise(F.col("us"))
-        .alias("us")
-    )
-    pairs = guarded.select(
-        F.posexplode("us").alias("i", "u"), F.col("us")
-    ).select(
-        "u",
-        F.explode(F.slice("us", F.col("i") + F.lit(2), F.size("us"))).alias("v"),
-    )
-    e0 = pairs.distinct()
     # distinct BEFORE the md5 thinning, deliberately: map-side partial
     # distinct collapses the ~24x pair duplication across part keys
     # (7M generated pairs -> ~1M shuffled rows at sf0.1), and the md5
@@ -171,12 +61,8 @@ def _undirected_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     # filter and distinct commute, but this order shuffles fewer rows
     # and hashes ~20x less (guide §2.3/§1.2: cheapest total plan,
     # measured equal-wall locally and strictly less work at scale).
-    bucket = F.conv(
-        F.substring(F.md5((F.col("u") * 1000 + F.col("v")).cast("string")), 1, 4),
-        16,
-        10,
-    ).cast("int")
-    return e0.where(bucket < 9830)
+    e0 = co_occurrence_pairs(ps, "l_partkey", "l_suppkey")
+    return e0.where(md5_thin(1000, EDGE_THIN_BELOW))
 
 
 def _sql_pagerank() -> str:
@@ -2385,16 +2271,9 @@ def q_percolation_robustness(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import connected_components_star
 
     eu = _undirected_edges(spark, sf_dir).localCheckpoint(eager=True)
-    bucket = F.conv(
-        F.substring(
-            F.md5((F.col("u") * 7919 + F.col("v")).cast("string")), 1, 4
-        ),
-        16,
-        10,
-    ).cast("int")
     rows = []
     for thr in _PERC_LEVELS:
-        kept = eu.where(bucket < thr).localCheckpoint(eager=True)
+        kept = eu.where(md5_thin(7919, thr)).localCheckpoint(eager=True)
         comp = connected_components_star(kept, "u", "v")
         sizes = comp.groupBy("cluster_id").agg(F.count(F.lit(1)).alias("n"))
         rows.append(
@@ -2841,23 +2720,8 @@ def q_weighted_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     ps = t(spark, sf_dir, "lineitem").select(
         "l_partkey", "l_suppkey"
     ).distinct()
-    a = _guard_pk_fanout(
-        ps.select(F.col("l_partkey").alias("pk"), F.col("l_suppkey").alias("u")),
-        "u",
-    )
-    b = ps.select(F.col("l_partkey").alias("pk"), F.col("l_suppkey").alias("v"))
-    ew0 = (
-        a.join(b, "pk")
-        .where(F.col("u") < F.col("v"))
-        .groupBy("u", "v")
-        .agg(F.count(F.lit(1)).alias("w"))
-    )
-    bucket = F.conv(
-        F.substring(F.md5((F.col("u") * 1000 + F.col("v")).cast("string")), 1, 4),
-        16,
-        10,
-    ).cast("int")
-    ew = ew0.where(bucket < 9830)
+    ew0 = co_occurrence_pairs(ps, "l_partkey", "l_suppkey", weighted=True)
+    ew = ew0.where(md5_thin(1000, EDGE_THIN_BELOW))
     wedges = (
         ew.select(F.col("u").alias("src"), F.col("v").alias("dst"), "w")
         .unionByName(

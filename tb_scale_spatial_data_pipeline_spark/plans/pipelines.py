@@ -18,20 +18,10 @@ from ..operators.relabel import solar_shadow_rules
 from ..raster.kernels import gaussian_smooth_tiles, reproject_tiles
 from ..raster.segmentation import segment_shape_metrics, segment_tiles
 from ..raster.tiles import halo_duplicate, synthetic_raster
+from ._util import registry
 from .checkpoint import stage, stage_root
 
-QUERIES: dict = {}
-ORACLES: dict = {}
-
-
-def _q(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
+QUERIES, ORACLES, _q = registry()
 
 
 # ---------------------------------------------------------------------------

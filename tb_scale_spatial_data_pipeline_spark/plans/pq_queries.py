@@ -17,25 +17,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ._util import t
+from ._util import t, registry
 
-QUERIES: dict = {}
-ORACLES: dict = {}
+QUERIES, ORACLES, _q = registry()
 
 DIM = 64
 M = 8          # sub-spaces
 SUB = DIM // M
 K = 4          # codewords per sub-space
-
-def _q(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
-
 
 def _sql_sub_dist2(m: int, a: str, b: str) -> str:
     """Left-associated Σ (a[i]-b[i])² over sub-space m — op-for-op the

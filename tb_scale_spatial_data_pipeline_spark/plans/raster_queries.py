@@ -20,10 +20,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.composites import argmax_composite, grouped_median
-from ._util import t
+from ._util import t, registry
 
-QUERIES: dict = {}
-ORACLES: dict = {}
+QUERIES, ORACLES, _q = registry()
 
 _SQL_PIXELS = """
     SELECT l_orderkey % 32 AS x,
@@ -51,16 +50,6 @@ def _pixels(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_quantity").alias("b1"),
         F.col("l_extendedprice").alias("b2"),
     )
-
-
-def _q(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
 
 
 # ---------------------------------------------------------------------------

@@ -17,20 +17,9 @@ from ..functions.signatures import combo_signature, hashed_model_key
 from ..operators.composites import grouped_median, argmax_composite, grouped_percentiles
 from ..operators.joins import broadcast_lookup, dual_model_fallback, combo_dispatch, grid_zip_join
 from ..operators.relabel import solar_shadow_rules
-from ._util import t, dsum, davg, sql_dsum, sql_davg
+from ._util import t, dsum, davg, sql_dsum, sql_davg, registry
 
-QUERIES: dict = {}
-ORACLES: dict = {}
-
-
-def _q(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
+QUERIES, ORACLES, _q = registry()
 
 
 # ---------------------------------------------------------------------------

@@ -10,20 +10,9 @@ from pyspark.sql import functions as F
 
 from ..operators.skew import salted_agg
 from ..sources.catalog import register_views
-from ._util import t, dsum, sql_dsum
+from ._util import t, dsum, sql_dsum, registry
 
-QUERIES: dict = {}
-ORACLES: dict = {}
-
-
-def _q(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
+QUERIES, ORACLES, _q = registry()
 
 
 # ---------------------------------------------------------------------------

@@ -24,20 +24,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ._util import t
+from ._util import t, registry
+from .graph_queries import _undirected_edges
 
-QUERIES: dict = {}
-ORACLES: dict = {}
-
-
-def _q(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
+QUERIES, ORACLES, _q = registry()
 
 
 def _dec(col: str, p: int = 18, s: int = 2):
@@ -587,32 +577,13 @@ def q_q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .graph_queries import _guard_pk_fanout
-
-    ps = t(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey").distinct()
-    a = _guard_pk_fanout(
-        ps.select(F.col("l_partkey").alias("pk"), F.col("l_suppkey").alias("u")),
-        "u",
-    )
-    b = ps.select(F.col("l_partkey").alias("pk"), F.col("l_suppkey").alias("v"))
-    e0 = (
-        a.join(b, "pk")
-        .where(F.col("u") < F.col("v"))
-        .select("u", "v")
-        .distinct()
-    )
-    bucket = F.conv(
-        F.substring(F.md5((F.col("u") * 1000 + F.col("v")).cast("string")), 1, 4),
-        16,
-        10,
-    ).cast("int")
-    # materialize the sampled edge set once: the oriented triangle
-    # join consumes it via THREE branches plus two degree joins, which
-    # otherwise re-derive the lineitem self-join per branch (plan
-    # census: 166 -> ~30 Exchanges)
-    e = e0.where(bucket < 9830).localCheckpoint(eager=True)
     from ..operators.graphs import oriented_triangle_count
 
+    # materialize the sampled edge set once: the oriented triangle
+    # join consumes it via THREE branches plus two degree joins, which
+    # otherwise re-derive the pair expansion per branch (plan census:
+    # 166 -> ~30 Exchanges)
+    e = _undirected_edges(spark, sf_dir).localCheckpoint(eager=True)
     return oriented_triangle_count(e, by_degree=True)
 
 
@@ -1271,21 +1242,7 @@ def q_pareto_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_local_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.graphs import oriented_triangles, vertex_degrees
 
-    from .graph_queries import _guard_pk_fanout
-
-    ps = t(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey").distinct()
-    a = _guard_pk_fanout(
-        ps.select(F.col("l_partkey").alias("pk"), F.col("l_suppkey").alias("u")),
-        "u",
-    )
-    b = ps.select(F.col("l_partkey").alias("pk"), F.col("l_suppkey").alias("v"))
-    e0 = a.join(b, "pk").where(F.col("u") < F.col("v")).select("u", "v").distinct()
-    bucket = F.conv(
-        F.substring(F.md5((F.col("u") * 1000 + F.col("v")).cast("string")), 1, 4),
-        16,
-        10,
-    ).cast("int")
-    e = e0.where(bucket < 9830).localCheckpoint(eager=True)
+    e = _undirected_edges(spark, sf_dir).localCheckpoint(eager=True)
     deg = vertex_degrees(e)
     # tri feeds three union branches: materialize the triangle list
     tri = oriented_triangles(e, by_degree=True).localCheckpoint(eager=True)

@@ -41,23 +41,12 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.spread import broadcast_if_small
-from ._util import t
+from ._util import t, registry
 from .graph_queries import _SQL_EDGES as _EDGES_CTE
 from .graph_queries import _undirected_edges
 from .round15_queries import _SQL_DAILY, _daily_cents
 
-QUERIES: dict = {}
-ORACLES: dict = {}
-
-
-def _q(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
+QUERIES, ORACLES, _q = registry()
 
 
 # Shared: the day spine with a contiguous 1-based index rn (ordered by

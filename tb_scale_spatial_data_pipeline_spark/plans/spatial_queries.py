@@ -17,10 +17,9 @@ from ..functions.geometry import (
     rect_perimeter_expr,
     wkt_polygon_area,
 )
-from ._util import t
+from ._util import t, registry
 
-QUERIES: dict = {}
-ORACLES: dict = {}
+QUERIES, ORACLES, _q = registry()
 
 # DuckDB-side rectangle-corner regexp (same shape as functions/geometry._RECT_RE)
 _SQL_RECT_RE = (
@@ -74,16 +73,6 @@ def _points(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("c_custkey") % 40).cast("double").alias("px"),
         (F.col("c_custkey") % 30).cast("double").alias("py"),
     )
-
-
-def _q(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
 
 
 # ---------------------------------------------------------------------------

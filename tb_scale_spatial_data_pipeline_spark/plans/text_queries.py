@@ -19,10 +19,9 @@ from ..functions.text import (
     token_count,
 )
 from ..operators.dedup import exact_dedup, lsh_candidate_pairs
-from ._util import t
+from ._util import t, registry
 
-QUERIES: dict = {}
-ORACLES: dict = {}
+QUERIES, ORACLES, _q = registry()
 
 # SQL fragments kept in lock-step with functions/text.py
 _SQL_NORM = r"trim(regexp_replace(lower(text), '\s+', ' ', 'g'))"
@@ -32,16 +31,6 @@ _SQL_SHINGLES = (
     f"ELSE list_transform(generate_series(1, length({_SQL_NORM}) - 4), "
     f"i -> substring({_SQL_NORM}, i, 5)) END"
 )
-
-
-def _q(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
 
 
 # ---------------------------------------------------------------------------

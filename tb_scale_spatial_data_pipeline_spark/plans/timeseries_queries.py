@@ -17,23 +17,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ._util import dsum, sql_dsum, t
+from ._util import dsum, sql_dsum, t, registry
 
-QUERIES: dict = {}
-ORACLES: dict = {}
+QUERIES, ORACLES, _q = registry()
 
 _FMT = "yyyy-MM-dd HH:mm:ss"
 _SQL_FMT = "%Y-%m-%d %H:%M:%S"
-
-
-def _q(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
 
 
 # ---------------------------------------------------------------------------

@@ -14,10 +14,9 @@ from ..operators.similarity import (
     lsh_ann_buckets,
     plane_sign,
 )
-from ._util import t
+from ._util import t, registry
 
-QUERIES: dict = {}
-ORACLES: dict = {}
+QUERIES, ORACLES, _q = registry()
 
 DIM = 64
 N_PLANES = 8
@@ -37,16 +36,6 @@ def _sql_cosine(a: str, b: str, n: int = DIM) -> str:
     na = _SQL_NORM_A.format(a=a, n=n)
     nb = _SQL_NORM_A.format(a=b, n=n)
     return f"({dot} / ({na} * {nb} + 1e-12))"
-
-
-def _q(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
 
 
 # ---------------------------------------------------------------------------

@@ -11,6 +11,8 @@ import pandas as pd
 
 from conftest import SF_SMOKE
 
+from tb_scale_spatial_data_pipeline_spark.operators.graphs import EDGE_THIN_BELOW
+
 
 def test_sssp_matches_driver_dijkstra(spark):
     from tb_scale_spatial_data_pipeline_spark.plans.graph_queries import (
@@ -108,7 +110,7 @@ def test_clustering_coefficient_replay(spark):
     for sup in by_part.values():
         for u, v in combinations(sorted(set(sup)), 2):
             h = int(hashlib.md5(str(u * 1000 + v).encode()).hexdigest()[:4], 16)
-            if h < 9830:
+            if h < EDGE_THIN_BELOW:
                 edges.add((u, v))
     adj: dict[int, set[int]] = {}
     for u, v in edges:

@@ -399,11 +399,10 @@ def test_lof_candidates_equi_join_only(spark):
 
 
 def test_pk_fanout_guard_pinned_in_edge_build(spark):
-    """The co-supply pk self-join's per-part fan-out bound must be IN
-    the dataflow: the guard join's count column and the raise_error
-    check must survive optimization (the assert_true(...).isNull()
-    form was silently erased by NullPropagation — this pins the
-    surviving shape)."""
+    """The pair expansion's per-group fan-out bound must be IN the
+    dataflow: the size() check and its raise_error must survive
+    optimization (the assert_true(...).isNull() form was silently
+    erased by NullPropagation — this pins the surviving shape)."""
     from tb_scale_spatial_data_pipeline_spark.plans import graph_queries as gq
 
     eu = gq._undirected_edges(spark, SF_SMOKE)
@@ -414,75 +413,88 @@ def test_pk_fanout_guard_pinned_in_edge_build(spark):
     assert "fan-out exceeds" in op
 
 
-def test_pk_fanout_guard_raises_on_hot_part(spark):
-    """A part whose co-supplier count exceeds the bound must fail
-    LOUDLY when the guarded column is consumed — the alternative at
-    100x is a silent quadratic fan-out in one task."""
-    from tb_scale_spatial_data_pipeline_spark.plans import graph_queries as gq
+def test_pk_fanout_guard_raises_on_hot_part(spark, monkeypatch):
+    """A group whose member count exceeds the bound must fail LOUDLY
+    on both the distinct and the weighted pair path — the alternative
+    at 100x is a silent quadratic fan-out in one task."""
+    from tb_scale_spatial_data_pipeline_spark.operators import graphs
 
-    old = gq._PK_FANOUT_BOUND
-    gq._PK_FANOUT_BOUND = 3
-    try:
-        ps = spark.createDataFrame(
-            [(1, i) for i in range(5)] + [(2, 9)], "pk int, u int"
-        )
+    monkeypatch.setattr(graphs, "_PK_FANOUT_BOUND", 3)
+    hot = spark.createDataFrame(
+        [(1, i) for i in range(5)] + [(2, 9)], "pk int, u int"
+    )
+    ok = spark.createDataFrame([(1, 7), (1, 9), (2, 9)], "pk int, u int")
+    for weighted in (False, True):
         with pytest.raises(Exception, match="fan-out exceeds"):
-            gq._guard_pk_fanout(ps, "u").collect()
-        ok = spark.createDataFrame([(1, 7), (2, 9)], "pk int, u int")
-        assert sorted(r.u for r in gq._guard_pk_fanout(ok, "u").collect()) == [7, 9]
-    finally:
-        gq._PK_FANOUT_BOUND = old
+            graphs.co_occurrence_pairs(hot, "pk", "u", weighted=weighted).collect()
+        got = graphs.co_occurrence_pairs(ok, "pk", "u", weighted=weighted)
+        assert [tuple(r) for r in got.collect()] == (
+            [(7, 9, 1)] if weighted else [(7, 9)]
+        )
 
 
-def test_undirected_edges_guard_raises_through_pair_expansion(spark):
+def test_undirected_edges_guard_raises_through_pair_expansion(spark, monkeypatch):
     """The fan-out bound must also trip inside _undirected_edges itself
     (the array-combination form checks size(us) on the grouped supplier
-    array — same LOUD failure as the old window-count guard)."""
+    array)."""
+    from tb_scale_spatial_data_pipeline_spark.operators import graphs
     from tb_scale_spatial_data_pipeline_spark.plans import graph_queries as gq
 
-    old = gq._PK_FANOUT_BOUND
-    gq._PK_FANOUT_BOUND = 1
-    try:
-        with pytest.raises(Exception, match="fan-out exceeds"):
-            gq._undirected_edges(spark, SF_SMOKE).collect()
-    finally:
-        gq._PK_FANOUT_BOUND = old
+    monkeypatch.setattr(graphs, "_PK_FANOUT_BOUND", 1)
+    with pytest.raises(Exception, match="fan-out exceeds"):
+        gq._undirected_edges(spark, SF_SMOKE).collect()
 
 
-def test_undirected_edges_matches_join_form(spark):
+@pytest.mark.parametrize(
+    "grouping", ["supplier_part", "customer_part", "part_order_weighted"]
+)
+def test_co_occurrence_pairs_matches_join_form(spark, grouping):
     """The sorted-array combination expansion must produce exactly the
-    pair set of the reference pk self-join (u < v, distinct, md5
-    bucket-thinned) — the contract every downstream graph query and
-    its SQL oracle assume."""
+    pair set of the reference group self-join (u < v; distinct, or
+    counted per shared group when weighted) on each grouping the
+    registry builds: co-suppliers (md5-thinned as _undirected_edges),
+    co-purchasing customers (k-core thinning) and order baskets
+    (weighted, as the co-occurrence recommenders)."""
     from pyspark.sql import functions as F
 
-    from tb_scale_spatial_data_pipeline_spark.plans import graph_queries as gq
+    from tb_scale_spatial_data_pipeline_spark.operators.graphs import (
+        EDGE_THIN_BELOW,
+        co_occurrence_pairs,
+        md5_thin,
+    )
     from tb_scale_spatial_data_pipeline_spark.plans._util import t
+    from tb_scale_spatial_data_pipeline_spark.plans.experiment_queries import (
+        _KCORE_THR,
+    )
 
-    ps = (
-        t(spark, SF_SMOKE, "lineitem")
-        .select("l_partkey", "l_suppkey")
-        .distinct()
-    )
-    a = ps.select(F.col("l_partkey").alias("pk"), F.col("l_suppkey").alias("u"))
-    b = ps.select(F.col("l_partkey").alias("pk"), F.col("l_suppkey").alias("v"))
-    bucket = F.conv(
-        F.substring(
-            F.md5((F.col("u") * 1000 + F.col("v")).cast("string")), 1, 4
-        ),
-        16,
-        10,
-    ).cast("int")
-    ref = (
-        a.join(b, "pk")
-        .where(F.col("u") < F.col("v"))
-        .select("u", "v")
-        .distinct()
-        .where(bucket < 9830)
-    )
-    got = {(r.u, r.v) for r in gq._undirected_edges(spark, SF_SMOKE).collect()}
-    want = {(r.u, r.v) for r in ref.collect()}
-    assert got == want and len(got) > 0
+    weighted = grouping == "part_order_weighted"
+    li = t(spark, SF_SMOKE, "lineitem")
+    if grouping == "supplier_part":
+        df = li.select(F.col("l_partkey").alias("g"), F.col("l_suppkey").alias("m"))
+        thin = md5_thin(1000, EDGE_THIN_BELOW)
+    elif grouping == "customer_part":
+        o = t(spark, SF_SMOKE, "orders")
+        df = o.join(li, o.o_orderkey == li.l_orderkey).select(
+            F.col("l_partkey").alias("g"), F.col("o_custkey").alias("m")
+        )
+        thin = md5_thin(100000, _KCORE_THR)
+    else:
+        df = li.select(F.col("l_orderkey").alias("g"), F.col("l_partkey").alias("m"))
+        thin = F.lit(True)
+    df = df.distinct()
+    a = df.select("g", F.col("m").alias("u"))
+    b = df.select("g", F.col("m").alias("v"))
+    j = a.join(b, "g").where(F.col("u") < F.col("v"))
+    if weighted:
+        ref = j.groupBy("u", "v").agg(F.count(F.lit(1)).alias("w"))
+    else:
+        ref = j.select("u", "v").distinct()
+    got = co_occurrence_pairs(df, "g", "m", weighted=weighted)
+    got_set = {tuple(r) for r in got.where(thin).collect()}
+    want_set = {tuple(r) for r in ref.where(thin).collect()}
+    assert got_set == want_set and len(got_set) > 0
+    if weighted:
+        assert max(r[2] for r in got_set) > 1  # counts, not just pairs
 
 
 def test_adamic_adar_equi_joins_only(spark):

@@ -13,6 +13,7 @@ from collections import defaultdict
 
 import pytest
 
+from tb_scale_spatial_data_pipeline_spark.operators.graphs import EDGE_THIN_BELOW
 from tb_scale_spatial_data_pipeline_spark.plans import all_queries
 
 SF_SMOKE = "/root/testdata/sf0.001"
@@ -36,7 +37,7 @@ def _edges_py(spark, sf=SF_SMOKE):
         for i, u in enumerate(sks):
             for v in sks[i + 1 :]:
                 h = hashlib.md5(str(u * 1000 + v).encode()).hexdigest()
-                if int(h[:4], 16) < 9830:
+                if int(h[:4], 16) < EDGE_THIN_BELOW:
                     eu.add((u, v))
     return eu
 

@@ -23,6 +23,8 @@ import pytest
 
 from conftest import SF_SMOKE
 
+from tb_scale_spatial_data_pipeline_spark.operators.graphs import EDGE_THIN_BELOW
+
 
 @pytest.fixture(scope="module")
 def daily() -> pd.DataFrame:
@@ -285,7 +287,7 @@ def test_weisfeiler_leman_crosscheck(spark):
         (u, v)
         for (u, v) in pairs
         if int(hashlib.md5(str(u * 1000 + v).encode()).hexdigest()[:4], 16)
-        < 9830
+        < EDGE_THIN_BELOW
     ]
     adj: dict[int, list[int]] = {}
     for u, v in kept:

@@ -16,6 +16,7 @@ import pytest
 
 from conftest import SF_SMOKE
 
+from tb_scale_spatial_data_pipeline_spark.operators.graphs import EDGE_THIN_BELOW
 from tb_scale_spatial_data_pipeline_spark.plans import all_queries
 
 
@@ -97,7 +98,7 @@ def _edges_py(spark):
         for i, u in enumerate(ss):
             for v in ss[i + 1:]:
                 h = hashlib.md5(str(u * 1000 + v).encode()).hexdigest()
-                if int(h[:4], 16) < 9830:
+                if int(h[:4], 16) < EDGE_THIN_BELOW:
                     eu.add((u, v))
     return eu
 
