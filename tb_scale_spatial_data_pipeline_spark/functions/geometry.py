@@ -6,7 +6,7 @@ Two tiers:
 - **Catalyst tier** (`*_expr` functions): closed-form expressions for
   axis-aligned-rectangle WKT (the engine's polygonization output,
   `raster/segmentation.py`) — regexp-extract the corners, compute
-  area/perimeter/centroid/containment in pure JVM expressions. These
+  area/perimeter/centroid in pure JVM expressions. These
   are the hot-path forms: a spatial filter or bbox join over 100 TB
   never leaves codegen.
 - **pandas-UDF tier** (`wkt_polygon_area`): general simple-polygon
@@ -62,16 +62,6 @@ def rect_centroid_x_expr(wkt: Column) -> Column:
 
 def rect_centroid_y_expr(wkt: Column) -> Column:
     return (rect_y0(wkt) + rect_y1(wkt)) / 2.0
-
-
-def rect_contains_point_expr(wkt: Column, px: Column, py: Column) -> Column:
-    """ST_Contains for the rectangle tier (half-open [x0,x1) × [y0,y1))."""
-    return (
-        (px >= rect_x0(wkt))
-        & (px < rect_x1(wkt))
-        & (py >= rect_y0(wkt))
-        & (py < rect_y1(wkt))
-    )
 
 
 def _shoelace_area_series(wkt: pd.Series) -> pd.Series:

@@ -21,15 +21,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def train_centroid_models(
-    train: DataFrame, combo_col: str, label_col: str, feature_cols: list[str]
-) -> DataFrame:
-    """Distributed 'training': per (combo, label) feature centroids —
-    one grouped aggregate, map-side partials (A-agg shape)."""
-    avgs = [F.avg(c).alias(c) for c in feature_cols]
-    return train.groupBy(combo_col, label_col).agg(*avgs)
-
-
 def dispatch_predict(
     probe: DataFrame,
     models: DataFrame,

@@ -43,13 +43,6 @@ def exact_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def minhash_signature_col(text: Column, seed: int, k: int = 5) -> Column:
-    """One MinHash value: lexicographic min of md5(seed:shingle) over
-    the distinct k-shingles. md5-as-hash keeps it engine-portable."""
-    sh = F.array_distinct(shingles(text, k))
-    return F.array_min(F.transform(sh, lambda s: F.md5(F.concat(F.lit(f"{seed}:"), s))))
-
-
 def minhash_signatures(
     df: DataFrame, id_col: str, text_col: str, num_hashes: int = 8, k: int = 3
 ) -> DataFrame:

@@ -26,14 +26,30 @@ co-occurrence graph in the registry — suppliers sharing a part,
 customers sharing a part, parts sharing an order — built once per group
 as a sorted-array combination behind one per-group fan-out bound, and
 thinned to realistic sparsity by one md5 bucket predicate (`md5_thin`).
+
+Graph rounds. Three helpers own the policy of the iterative graph tier,
+so a change to it lands once instead of at every loop:
+
+- `directed_edges` symmetrizes undirected (u, v, *carry) edges into
+  (src, dst, *carry) with `unionByName` and materializes them with an
+  eager `localCheckpoint` — every caller reads the table more than once;
+- `aggregate_messages` is one neighbour-aggregation round: the
+  per-round node vector joins the edge table behind the size-guarded
+  broadcast (`broadcast_if_small`) and the messages group by dst;
+- `bfs_levels` is the level-synchronous frontier loop: one edge join,
+  a distinct and an anti-join against the settled set per level, a
+  lazy `localCheckpoint` per level and an early exit on an empty
+  frontier.
 """
 
 from __future__ import annotations
 
+from collections.abc import Sequence
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .spread import full_width
+from .spread import broadcast_if_small, full_width
 
 # Per-group fan-out bound for the within-group pair expansion. The
 # expansion's output is Θ(fanout²) per group key, all landing in ONE
@@ -127,6 +143,79 @@ def co_occurrence_pairs(
     if weighted:
         return pairs.groupBy("u", "v").agg(F.count(F.lit(1)).alias("w"))
     return pairs.distinct()
+
+
+def directed_edges(eu: DataFrame, *carry: str) -> DataFrame:
+    """Both directions (src, dst, *carry) of undirected (u, v, *carry)
+    edges, eagerly checkpointed: every caller reads its edge table more
+    than once (each round of a loop, or several branches of one plan),
+    so the edge build runs once instead of per read."""
+    return (
+        eu.select(F.col("u").alias("src"), F.col("v").alias("dst"), *carry)
+        .unionByName(
+            eu.select(F.col("v").alias("src"), F.col("u").alias("dst"), *carry)
+        )
+        .localCheckpoint(eager=True)
+    )
+
+
+def aggregate_messages(
+    edges: DataFrame,
+    vec: DataFrame,
+    bound: int,
+    *aggs: Column,
+    by: str | Sequence[str] = (),
+) -> DataFrame:
+    """One neighbour-aggregation round: every node of the per-round
+    vector `vec` (keyed by `node`) sends its columns along its out-edges
+    (`src` -> `dst`), and the messages aggregate per (dst AS node, *by).
+
+    The vector is broadcast behind the size guard (`bound` is an upper
+    bound on its row count) — node metadata, so while the guard holds
+    the edge table never re-exchanges and only the per-dst aggregate
+    shuffles (guide §2.4/§3.1)."""
+    by = [by] if isinstance(by, str) else list(by)
+    return (
+        edges.join(broadcast_if_small(vec, bound), vec["node"] == edges["src"])
+        .groupBy(F.col("dst").alias("node"), *by)
+        .agg(*aggs)
+    )
+
+
+def bfs_levels(
+    edges: DataFrame,
+    start: DataFrame,
+    max_hops: int,
+    keys: Sequence[str] = ("node",),
+) -> DataFrame:
+    """Level-synchronous BFS over directed (src, dst) edges from the
+    `start` rows; returns (*keys, d), the min-hop distance of every row
+    reached within `max_hops`. `keys` must contain "node"; the other
+    keys ride along unchanged, so keys=("seed", "node") runs one BFS
+    per seed in the same loop.
+
+    Per level: ONE edge join, a distinct, and an anti-join against the
+    settled set — rows in flight are only the frontier. Each level is
+    a lazy checkpoint (its first read, the emptiness probe, runs it),
+    and the loop stops at the first empty frontier."""
+    keys = list(keys)
+    carried = [k for k in keys if k != "node"]
+    dist = start.select(*keys, F.lit(0).cast("bigint").alias("d")).localCheckpoint()
+    frontier = dist.select(*keys)
+    for k in range(1, max_hops + 1):
+        nxt = (
+            frontier.join(edges, frontier["node"] == edges["src"])
+            .select(*carried, F.col("dst").alias("node"))
+            .distinct()
+            .join(dist.select(*keys), keys, "left_anti")
+            .withColumn("d", F.lit(k).cast("bigint"))
+            .localCheckpoint()
+        )
+        if nxt.isEmpty():
+            break
+        dist = dist.unionByName(nxt).localCheckpoint()
+        frontier = nxt.select(*keys)
+    return dist
 
 
 def vertex_degrees(edges: DataFrame) -> DataFrame:

@@ -51,29 +51,31 @@ def spread_cpu(df: DataFrame) -> DataFrame:
 BROADCAST_MAX_ROWS = 8_000_000
 
 
-def broadcast_if_small(
-    df: DataFrame, n_rows: int, max_rows: int = BROADCAST_MAX_ROWS
-) -> DataFrame:
+def broadcast_if_small(df: DataFrame, n_rows: int) -> DataFrame:
     """Size-guarded broadcast hint for per-round node-vector joins.
 
     The iterative graph loops join a checkpointed edge table against a
-    per-round O(|nodes|) vector. The explicit hint is required locally
-    because checkpointed (RDD-scan) frames carry no runtime stats, so
-    AQE never auto-broadcasts against them — but a hint FORCES the
-    broadcast (AQE will not demote it), and node cardinality grows
-    linearly with scale: at TPC-H-proportioned 100 TB (SF ~ 1e5),
-    suppliers ~ 1e9 and the rank vector is a ~16 GB relation, over
-    Spark's hard 8 GB / 512M-row broadcast limit and any sane driver
-    heap — a hard query failure where a shuffle join merely degrades.
+    per-round O(|nodes|) vector. The explicit hint is required because
+    the planner's size estimate for that vector is useless: a
+    checkpoint keeps the estimate of the plan it was built from, and a
+    scan-rooted one stays usable, but a vector built by a join carries
+    an exploded estimate (a 100k-node pagerank-shaped vector estimates
+    442 TiB after one round on Spark 4.1.2), so unhinted it sort-merge
+    joins every round. A hint, however, FORCES the broadcast (AQE will
+    not demote it), and node cardinality grows linearly with scale: at
+    TPC-H-proportioned 100 TB (SF ~ 1e5), suppliers ~ 1e9 and the rank
+    vector is a ~16 GB relation, over Spark's hard 8 GB / 512M-row
+    broadcast limit and any sane driver heap — a hard query failure
+    where a shuffle join merely degrades.
 
     ``n_rows`` is an upper bound on the vector's row count the caller
     already has (an exact node count, or the checkpointed edge count
     that bounds it — one no-shuffle count on an already-materialized
-    RDD, amortized over every round of the loop). Above ``max_rows``
-    the frame is returned unhinted and the planner's sort-merge /
-    shuffled-hash join degrades gracefully.
+    RDD, amortized over every round of the loop). Above
+    ``BROADCAST_MAX_ROWS`` the frame is returned unhinted and the
+    planner's sort-merge / shuffled-hash join degrades gracefully.
     """
-    if n_rows <= max_rows:
+    if n_rows <= BROADCAST_MAX_ROWS:
         return F.broadcast(df)
     return df
 

@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..operators.graphs import co_occurrence_pairs, md5_thin
+from ..operators.graphs import co_occurrence_pairs, directed_edges, md5_thin
 from ._util import t, registry
 
 QUERIES, ORACLES, _q = registry()
@@ -187,13 +187,7 @@ def q_kcore_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     eu = co_occurrence_pairs(cp, "p", "c").where(md5_thin(100000, _KCORE_THR))
-    edges = (
-        eu.select(F.col("u").alias("src"), F.col("v").alias("dst"))
-        .unionByName(eu.select(F.col("v").alias("src"), F.col("u").alias("dst")))
-        # every peel round reads the edge table: materialize it once
-        # instead of re-deriving the co-purchase self-join per round
-        .localCheckpoint()
-    )
+    edges = directed_edges(eu)
     alive = edges.select(F.col("src").alias("node")).distinct().localCheckpoint()
     for _ in range(_KCORE_ROUNDS):
         surviving = (

@@ -18,7 +18,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.graphs import EDGE_THIN_BELOW, co_occurrence_pairs, md5_thin
+from ..operators.graphs import (
+    EDGE_THIN_BELOW,
+    aggregate_messages,
+    bfs_levels,
+    co_occurrence_pairs,
+    directed_edges,
+    md5_thin,
+)
 from ..operators.spread import broadcast_if_small
 from ._util import t, registry
 
@@ -103,12 +110,7 @@ def _sql_pagerank() -> str:
 
 @_q("pagerank_suppliers", _sql_pagerank())
 def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    eu = _undirected_edges(spark, sf_dir)
-    edges = (
-        eu.select(F.col("u").alias("src"), F.col("v").alias("dst"))
-        .unionAll(eu.select(F.col("v").alias("src"), F.col("u").alias("dst")))
-        .localCheckpoint(eager=True)
-    )
+    edges = directed_edges(_undirected_edges(spark, sf_dir))
     nodes = edges.select(F.col("src").alias("node")).distinct().localCheckpoint(
         eager=True
     )
@@ -130,20 +132,12 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         "node", F.round(F.lit(1.0 / n), 12).alias("rank")
     )
     for _ in range(_PR_ITERS):
-        # broadcast the rank vector (node metadata, 16 B/node of data):
-        # the checkpointed edge table's partitioning is opaque to the
-        # planner, so the equi-join otherwise re-exchanges BOTH sides
-        # every round; with the broadcast only the per-dst aggregate
-        # shuffles (guide §2.4/§3.1). Size-guarded on the exact node
-        # count: past ~8M nodes the forced broadcast would outgrow the
-        # driver (16 GB at 1e9 nodes, over Spark's 8 GB cap), so the
-        # guard falls back to the shuffle join.
-        contrib = (
-            edges_deg.join(
-                broadcast_if_small(ranks, n), ranks["node"] == edges_deg["src"]
-            )
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.sum(F.col("rank") / F.col("outdeg")).alias("contrib"))
+        # size-guarded on the exact node count
+        contrib = aggregate_messages(
+            edges_deg,
+            ranks,
+            n,
+            F.sum(F.col("rank") / F.col("outdeg")).alias("contrib"),
         )
         ranks = (
             nodes.join(contrib, "node", "left")
@@ -208,12 +202,7 @@ def q_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     the observable that distinguishes synchronous fixed-round
     propagation from the frontier CC operators (which only expose the
     fixpoint)."""
-    eu = _undirected_edges(spark, sf_dir)
-    edges = (
-        eu.select(F.col("u").alias("src"), F.col("v").alias("dst"))
-        .unionAll(eu.select(F.col("v").alias("src"), F.col("u").alias("dst")))
-        .localCheckpoint(eager=True)
-    )
+    edges = directed_edges(_undirected_edges(spark, sf_dir))
     nodes = edges.select(F.col("src").alias("node")).distinct()
     labels = nodes.select("node", F.col("node").alias("label")).localCheckpoint(
         eager=True
@@ -231,15 +220,8 @@ def q_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     snaps = [_snap(0, labels)]
     for k in range(1, _LP_ITERS + 1):
-        # broadcast the label vector — node metadata (see pagerank),
-        # size-guarded: past ~8M nodes fall back to the shuffle join
-        nbr_min = (
-            edges.join(
-                broadcast_if_small(labels, n_nodes),
-                labels["node"] == edges["src"],
-            )
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.min("label").alias("nbr_min"))
+        nbr_min = aggregate_messages(
+            edges, labels, n_nodes, F.min("label").alias("nbr_min")
         )
         labels = (
             labels.join(nbr_min, "node", "left")
@@ -286,30 +268,10 @@ def _sql_bfs() -> str:
 
 @_q("bfs_hop_distance", _sql_bfs())
 def q_bfs_hop_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    eu = _undirected_edges(spark, sf_dir)
-    edges = (
-        eu.select(F.col("u").alias("src"), F.col("v").alias("dst"))
-        .unionByName(eu.select(F.col("v").alias("src"), F.col("u").alias("dst")))
-        .localCheckpoint()  # read by every hop: derive the edge join once
-    )
+    edges = directed_edges(_undirected_edges(spark, sf_dir))
     nodes = edges.select(F.col("src").alias("node")).distinct()
-    seeds = nodes.where(F.col("node") % 10 == 0)
-    dist = seeds.withColumn("hop", F.lit(0).cast("bigint")).localCheckpoint()
-    frontier = seeds
-    for k in range(1, _BFS_MAX_HOPS + 1):
-        nxt = (
-            frontier.join(edges, frontier.node == edges.src)
-            .select(F.col("dst").alias("node"))
-            .distinct()
-            .join(dist, "node", "left_anti")
-            .withColumn("hop", F.lit(k).cast("bigint"))
-            .localCheckpoint()
-        )
-        if nxt.isEmpty():
-            break
-        dist = dist.unionByName(nxt).localCheckpoint()
-        frontier = nxt.select("node")
-    return dist.select(F.col("node").alias("s_suppkey"), "hop")
+    dist = bfs_levels(edges, nodes.where(F.col("node") % 10 == 0), _BFS_MAX_HOPS)
+    return dist.select(F.col("node").alias("s_suppkey"), F.col("d").alias("hop"))
 
 
 # ---------------------------------------------------------------------------
@@ -380,15 +342,12 @@ def _weighted_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         % 9
         + 1
     ).cast("bigint")
-    ew = eu.withColumn("w", w)
-    return ew.select(
-        F.col("u").alias("src"), F.col("v").alias("dst"), "w"
-    ).unionByName(ew.select(F.col("v").alias("src"), F.col("u").alias("dst"), "w"))
+    return directed_edges(eu.withColumn("w", w), "w")
 
 
 @_q("sssp_weighted", _sql_sssp())
 def q_sssp_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    edges = _weighted_edges(spark, sf_dir).localCheckpoint(eager=True)
+    edges = _weighted_edges(spark, sf_dir)
     # |dist| <= |nodes| <= |directed edges| (every node appears as a
     # src in the symmetrized table); one no-shuffle count on the
     # checkpointed RDD bounds every round's broadcast guard
@@ -402,7 +361,7 @@ def q_sssp_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     for _ in range(_SSSP_ROUNDS):
         # broadcast the tentative-distance vector — node metadata (see
-        # pagerank), size-guarded; the weighted edge table never
+        # aggregate_messages), size-guarded; the weighted edge table never
         # re-exchanges while the guard holds
         relaxed = (
             edges.join(broadcast_if_small(dist, n_edges), dist.node == edges.src)
@@ -502,9 +461,7 @@ def _sql_adamic_adar() -> str:
 @_q("adamic_adar_topk", _sql_adamic_adar())
 def q_adamic_adar_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     eu = _undirected_edges(spark, sf_dir).localCheckpoint(eager=True)
-    edges = eu.select(
-        F.col("u").alias("src"), F.col("v").alias("dst")
-    ).unionByName(eu.select(F.col("v").alias("src"), F.col("u").alias("dst")))
+    edges = directed_edges(eu)
     deg = edges.groupBy(F.col("src").alias("x")).agg(
         # degree-1 nodes never center a wedge; unguarded 1/ln(1)
         # divides by zero (surfaced at sf0.001, where the sampled
@@ -544,9 +501,7 @@ def q_adamic_adar_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 @_q("link_prediction_jaccard", _sql_link_prediction())
 def q_link_prediction_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     eu = _undirected_edges(spark, sf_dir).localCheckpoint(eager=True)
-    edges = eu.select(
-        F.col("u").alias("src"), F.col("v").alias("dst")
-    ).unionByName(eu.select(F.col("v").alias("src"), F.col("u").alias("dst")))
+    edges = directed_edges(eu)
     deg = edges.groupBy(F.col("src").alias("x")).agg(F.count(F.lit(1)).alias("d"))
     e1 = edges.select(F.col("src").alias("b"), F.col("dst").alias("a"))
     e2 = edges.select(F.col("src").alias("b"), F.col("dst").alias("c"))
@@ -637,12 +592,7 @@ def _sql_ppr() -> str:
 
 @_q("personalized_pagerank", _sql_ppr())
 def q_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    eu = _undirected_edges(spark, sf_dir)
-    edges = (
-        eu.select(F.col("u").alias("src"), F.col("v").alias("dst"))
-        .unionAll(eu.select(F.col("v").alias("src"), F.col("u").alias("dst")))
-        .localCheckpoint(eager=True)
-    )
+    edges = directed_edges(_undirected_edges(spark, sf_dir))
     nodes = edges.select(F.col("src").alias("node")).distinct().localCheckpoint(
         eager=True
     )
@@ -673,16 +623,11 @@ def q_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_nodes = nodes.count()
     ranks = restart.select("node", F.col("restart").alias("rank"))
     for _ in range(_PPR_ITERS):
-        # broadcast the rank vector — same node-metadata broadcast as
-        # pagerank_suppliers, size-guarded; the edge table never
-        # re-exchanges while the guard holds
-        contrib = (
-            edges_deg.join(
-                broadcast_if_small(ranks, n_nodes),
-                ranks["node"] == edges_deg["src"],
-            )
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.sum(F.col("rank") / F.col("outdeg")).alias("contrib"))
+        contrib = aggregate_messages(
+            edges_deg,
+            ranks,
+            n_nodes,
+            F.sum(F.col("rank") / F.col("outdeg")).alias("contrib"),
         )
         ranks = (
             restart.join(contrib, "node", "left")
@@ -737,10 +682,7 @@ _PL_DMIN = 2
     """,
 )
 def q_degree_powerlaw_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    eu = _undirected_edges(spark, sf_dir)
-    edges = eu.select(F.col("u").alias("src"), F.col("v").alias("dst")).unionByName(
-        eu.select(F.col("v").alias("src"), F.col("u").alias("dst"))
-    ).localCheckpoint(eager=True)  # hist + tail branches share it
+    edges = directed_edges(_undirected_edges(spark, sf_dir))
     deg = edges.groupBy(F.col("src").alias("node")).agg(
         F.count(F.lit(1)).alias("d")
     )
@@ -803,10 +745,7 @@ def q_degree_powerlaw_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    eu = _undirected_edges(spark, sf_dir)
-    edges = eu.select(F.col("u").alias("src"), F.col("v").alias("dst")).unionByName(
-        eu.select(F.col("v").alias("src"), F.col("u").alias("dst"))
-    ).localCheckpoint(eager=True)  # deg + edge-join branches share it
+    edges = directed_edges(_undirected_edges(spark, sf_dir))
     deg = edges.groupBy(F.col("src").alias("node")).agg(
         F.count(F.lit(1)).alias("d")
     )
@@ -903,12 +842,7 @@ def _sql_resilience() -> str:
 
 @_q("hub_removal_resilience", _sql_resilience())
 def q_hub_removal_resilience(spark: SparkSession, sf_dir: str) -> DataFrame:
-    eu = _undirected_edges(spark, sf_dir)
-    edges = (
-        eu.select(F.col("u").alias("src"), F.col("v").alias("dst"))
-        .unionByName(eu.select(F.col("v").alias("src"), F.col("u").alias("dst")))
-        .localCheckpoint(eager=True)
-    )
+    edges = directed_edges(_undirected_edges(spark, sf_dir))
     deg = edges.groupBy(F.col("src").alias("node")).agg(
         F.count(F.lit(1)).alias("d")
     )
@@ -1014,33 +948,12 @@ def _sql_closeness() -> str:
 def q_closeness_centrality_sampled(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    eu = _undirected_edges(spark, sf_dir)
-    edges = (
-        eu.select(F.col("u").alias("src"), F.col("v").alias("dst"))
-        .unionByName(eu.select(F.col("v").alias("src"), F.col("u").alias("dst")))
-        .localCheckpoint()  # read every round
-    )
+    edges = directed_edges(_undirected_edges(spark, sf_dir))
     nodes = edges.select(F.col("src").alias("node")).distinct()
     seeds = nodes.where(F.col("node") % 10 == 0).select(
-        F.col("node").alias("seed")
+        F.col("node").alias("seed"), "node"
     )
-    dist = seeds.select(
-        "seed", F.col("seed").alias("node"), F.lit(0).cast("bigint").alias("d")
-    ).localCheckpoint()
-    frontier = dist.select("seed", "node")
-    for k in range(1, _CLOSE_MAX_HOPS + 1):
-        nxt = (
-            frontier.join(edges, frontier.node == edges.src)
-            .select("seed", F.col("dst").alias("node"))
-            .distinct()
-            .join(dist.select("seed", "node"), ["seed", "node"], "left_anti")
-            .withColumn("d", F.lit(k).cast("bigint"))
-            .localCheckpoint()
-        )
-        if nxt.isEmpty():
-            break
-        dist = dist.unionByName(nxt).localCheckpoint()
-        frontier = nxt.select("seed", "node")
+    dist = bfs_levels(edges, seeds, _CLOSE_MAX_HOPS, keys=("seed", "node"))
     reached = F.count(F.when(F.col("d") > 0, 1))
     lcm_term = F.when(
         F.col("d") > 0, F.floor(F.lit(_CLOSE_LCM) / F.col("d"))
@@ -1105,42 +1018,14 @@ def _sql_diameter() -> str:
     """
 
 
-def _bfs_from(edges: DataFrame, seed_df: DataFrame, max_hops: int) -> DataFrame:
-    """Level-synchronous BFS from the (1-row) seed frame; returns
-    (node, d) min-hop distances within the hop cap."""
-    dist = seed_df.select(
-        F.col("node"), F.lit(0).cast("bigint").alias("d")
-    ).localCheckpoint()
-    frontier = dist.select("node")
-    for k in range(1, max_hops + 1):
-        nxt = (
-            frontier.join(edges, frontier.node == edges.src)
-            .select(F.col("dst").alias("node"))
-            .distinct()
-            .join(dist.select("node"), "node", "left_anti")
-            .withColumn("d", F.lit(k).cast("bigint"))
-            .localCheckpoint()
-        )
-        if nxt.isEmpty():
-            break
-        dist = dist.unionByName(nxt).localCheckpoint()
-        frontier = nxt.select("node")
-    return dist
-
-
 @_q("graph_diameter_sweep", _sql_diameter())
 def q_graph_diameter_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    eu = _undirected_edges(spark, sf_dir)
-    edges = (
-        eu.select(F.col("u").alias("src"), F.col("v").alias("dst"))
-        .unionByName(eu.select(F.col("v").alias("src"), F.col("u").alias("dst")))
-        .localCheckpoint()
-    )
+    edges = directed_edges(_undirected_edges(spark, sf_dir))
     nodes = edges.select(F.col("src").alias("node")).distinct()
     start = nodes.agg(F.min("node").alias("node"))
-    d1 = _bfs_from(edges, start, _DIAM_MAX_HOPS)
+    d1 = bfs_levels(edges, start, _DIAM_MAX_HOPS)
     far = d1.orderBy(F.desc("d"), F.asc("node")).limit(1).select("node")
-    d2 = _bfs_from(edges, far, _DIAM_MAX_HOPS)
+    d2 = bfs_levels(edges, far, _DIAM_MAX_HOPS)
     return (
         start.select(F.col("node").cast("bigint").alias("start_node"))
         .join(F.broadcast(d1.agg(F.max("d").alias("ecc_start"))))
@@ -1225,12 +1110,7 @@ def q_community_label_propagation(
     label checksum): community counts stabilize in a handful of
     rounds on the fixture graph, and the checksum makes the hash
     sensitive to every node's label, not just the aggregate counts."""
-    eu = _undirected_edges(spark, sf_dir)
-    edges = (
-        eu.select(F.col("u").alias("src"), F.col("v").alias("dst"))
-        .unionAll(eu.select(F.col("v").alias("src"), F.col("u").alias("dst")))
-        .localCheckpoint(eager=True)
-    )
+    edges = directed_edges(_undirected_edges(spark, sf_dir))
     nodes = edges.select(F.col("src").alias("node")).distinct()
     labels = nodes.select("node", F.col("node").alias("label")).localCheckpoint(
         eager=True
@@ -1252,16 +1132,8 @@ def q_community_label_propagation(
     n_nodes = labels.count()
     snaps = [_snap(0, labels)]
     for k in range(1, _CLP_ITERS + 1):
-        # broadcast the label vector — same node-metadata broadcast as
-        # the pagerank loop, size-guarded; the edge table never
-        # re-exchanges while the guard holds
-        cnt = (
-            edges.join(
-                broadcast_if_small(labels, n_nodes),
-                labels["node"] == edges["src"],
-            )
-            .groupBy(F.col("dst").alias("node"), "label")
-            .agg(F.count(F.lit(1)).alias("c"))
+        cnt = aggregate_messages(
+            edges, labels, n_nodes, F.count(F.lit(1)).alias("c"), by="label"
         )
         # argmax by (count, then smallest label): max(struct(c, -label))
         # — one aggregation, no window, map-side partials intact.
@@ -1378,12 +1250,7 @@ def _sql_betweenness() -> str:
 
 @_q("betweenness_sampled", _sql_betweenness())
 def q_betweenness_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
-    eu = _undirected_edges(spark, sf_dir)
-    edges = (
-        eu.select(F.col("u").alias("src"), F.col("v").alias("dst"))
-        .unionByName(eu.select(F.col("v").alias("src"), F.col("u").alias("dst")))
-        .localCheckpoint(eager=True)
-    )
+    edges = directed_edges(_undirected_edges(spark, sf_dir))
     nodes = edges.select(F.col("src").alias("node")).distinct()
     seeds = nodes.orderBy("node").limit(_BC_SEEDS)
     f = {
@@ -2344,12 +2211,7 @@ def _sql_eigenvector() -> str:
 
 @_q("eigenvector_centrality", _sql_eigenvector())
 def q_eigenvector_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    eu = _undirected_edges(spark, sf_dir)
-    edges = (
-        eu.select(F.col("u").alias("src"), F.col("v").alias("dst"))
-        .unionByName(eu.select(F.col("v").alias("src"), F.col("u").alias("dst")))
-        .localCheckpoint(eager=True)
-    )
+    edges = directed_edges(_undirected_edges(spark, sf_dir))
     # |x| <= |directed edges|: one no-shuffle count on the checkpointed
     # RDD bounds every round's broadcast guard
     n_edges = edges.count()
@@ -2357,14 +2219,9 @@ def q_eigenvector_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
         "node", F.lit(1.0).alias("x")
     )
     for _ in range(_EIG_ITERS):
-        # broadcast the score vector — node metadata (see pagerank),
-        # size-guarded
-        raw = (
-            edges.join(broadcast_if_small(x, n_edges), x["node"] == edges["src"])
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.round(F.sum("x"), 12).alias("r"))
-            .localCheckpoint(eager=True)  # read by max + divide
-        )
+        raw = aggregate_messages(
+            edges, x, n_edges, F.round(F.sum("x"), 12).alias("r")
+        ).localCheckpoint(eager=True)  # read by max + divide
         mx = raw.agg(F.max("r").alias("v"))
         x = raw.join(F.broadcast(mx)).select(
             "node", F.round(F.col("r") / F.col("v"), 12).alias("x")
@@ -2479,14 +2336,7 @@ def _sql_edge_betweenness() -> str:
 
 @_q("edge_betweenness_topk", _sql_edge_betweenness())
 def q_edge_betweenness_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    eu_ = _undirected_edges(spark, sf_dir)
-    edges = (
-        eu_.select(F.col("u").alias("src"), F.col("v").alias("dst"))
-        .unionByName(
-            eu_.select(F.col("v").alias("src"), F.col("u").alias("dst"))
-        )
-        .localCheckpoint(eager=True)
-    )
+    edges = directed_edges(_undirected_edges(spark, sf_dir))
     nodes = edges.select(F.col("src").alias("node")).distinct()
     seeds = nodes.orderBy("node").limit(_BC_SEEDS)
     f = {
@@ -2722,13 +2572,7 @@ def q_weighted_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).distinct()
     ew0 = co_occurrence_pairs(ps, "l_partkey", "l_suppkey", weighted=True)
     ew = ew0.where(md5_thin(1000, EDGE_THIN_BELOW))
-    wedges = (
-        ew.select(F.col("u").alias("src"), F.col("v").alias("dst"), "w")
-        .unionByName(
-            ew.select(F.col("v").alias("src"), F.col("u").alias("dst"), "w")
-        )
-        .localCheckpoint(eager=True)
-    )
+    wedges = directed_edges(ew, "w")
     nodes = wedges.select(F.col("src").alias("node")).distinct()
     n = nodes.count()  # one scalar
     wout = wedges.groupBy(F.col("src").alias("node")).agg(
@@ -2737,9 +2581,9 @@ def q_weighted_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     r = nodes.select("node", F.round(F.lit(1.0 / n), 12).alias("rank"))
     for _ in range(_WPR_ITERS):
         # broadcast the rank vector and the per-node weight totals —
-        # both node metadata (see pagerank), size-guarded on the exact
-        # node count; the weighted edge table never re-exchanges while
-        # the guard holds
+        # both node metadata (see aggregate_messages), size-guarded on
+        # the exact node count; the weighted edge table never
+        # re-exchanges while the guard holds
         contrib = (
             wedges.join(broadcast_if_small(r, n), r["node"] == wedges["src"])
             .join(
@@ -2826,27 +2670,16 @@ def _sql_katz() -> str:
 
 @_q("katz_centrality", _sql_katz())
 def q_katz_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    eu = _undirected_edges(spark, sf_dir)
-    edges = (
-        eu.select(F.col("u").alias("src"), F.col("v").alias("dst"))
-        .unionByName(eu.select(F.col("v").alias("src"), F.col("u").alias("dst")))
-        .localCheckpoint(eager=True)
-    )
+    edges = directed_edges(_undirected_edges(spark, sf_dir))
     nodes = edges.select(F.col("src").alias("node")).distinct()
     # |x| <= |directed edges|: one no-shuffle count on the checkpointed
     # RDD bounds every round's broadcast guard
     n_edges = edges.count()
     x = nodes.select("node", F.lit(1.0).alias("x"))
     for _ in range(_KATZ_ITERS):
-        # broadcast the score vector — node metadata (see pagerank),
-        # size-guarded
-        contrib = (
-            edges.join(broadcast_if_small(x, n_edges), x["node"] == edges["src"])
-            .groupBy(F.col("dst").alias("cnode"))
-            .agg(F.sum("x").alias("s"))
-        )
+        contrib = aggregate_messages(edges, x, n_edges, F.sum("x").alias("s"))
         x = (
-            nodes.join(contrib, nodes["node"] == contrib["cnode"], "left")
+            nodes.join(contrib, "node", "left")
             .select(
                 "node",
                 F.round(
@@ -2914,9 +2747,7 @@ def q_katz_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_graphlet_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     eu = _undirected_edges(spark, sf_dir).localCheckpoint(eager=True)
-    edges = eu.select(F.col("u").alias("src"), F.col("v").alias("dst")).unionByName(
-        eu.select(F.col("v").alias("src"), F.col("u").alias("dst"))
-    )
+    edges = directed_edges(eu)
     deg = edges.groupBy(F.col("src").alias("node")).agg(
         F.count(F.lit(1)).alias("d")
     )
@@ -3006,7 +2837,7 @@ def _sql_minimax() -> str:
 
 @_q("minimax_path_bottleneck", _sql_minimax())
 def q_minimax_path_bottleneck(spark: SparkSession, sf_dir: str) -> DataFrame:
-    edges = _weighted_edges(spark, sf_dir).localCheckpoint(eager=True)
+    edges = _weighted_edges(spark, sf_dir)
     dist = (
         edges.select(F.col("src").alias("node"))
         .where(F.col("node") % 20 == 0)
@@ -3071,11 +2902,7 @@ def _sql_bipartite() -> str:
 @_q("graph_bipartite_check", _sql_bipartite())
 def q_graph_bipartite_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     eu = _undirected_edges(spark, sf_dir).localCheckpoint(eager=True)
-    edges = (
-        eu.select(F.col("u").alias("src"), F.col("v").alias("dst"))
-        .unionByName(eu.select(F.col("v").alias("src"), F.col("u").alias("dst")))
-        .localCheckpoint()
-    )
+    edges = directed_edges(eu)
     dist = (
         edges.select(F.col("src").alias("node"))
         .where(F.col("node") % 10 == 0)

@@ -994,7 +994,8 @@ def _sql_textrank() -> str:
 
 @_q("textrank_keywords", _sql_textrank())
 def q_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.spread import broadcast_if_small, spread_cpu
+    from ..operators.graphs import aggregate_messages
+    from ..operators.spread import spread_cpu
 
     # the window-pair explode is the CPU hot spot and otherwise fuses
     # into the single-split scan task; no-op at production split counts
@@ -1045,17 +1046,16 @@ def q_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_nodes = nodes.count()  # no-shuffle; bounds the broadcast guard
     r = nodes.select("node", F.lit(1.0).alias("rank"))
     for _ in range(_TR_ITERS):
-        # broadcast the rank vector — keyword-node metadata bounded by
-        # the min-count-pruned co-occurrence vocab (the graph-loop
-        # discipline from pagerank_suppliers), size-guarded; the edge
-        # table never re-exchanges per round while the guard holds
-        contrib = (
-            wedges.join(broadcast_if_small(r, n_nodes), r["node"] == wedges["src"])
-            .groupBy(F.col("dst").alias("cnode"))
-            .agg(F.sum(F.col("rank") * F.col("wt") / F.col("tw")).alias("contrib"))
+        # the rank vector is keyword-node metadata bounded by the
+        # min-count-pruned co-occurrence vocab
+        contrib = aggregate_messages(
+            wedges,
+            r,
+            n_nodes,
+            F.sum(F.col("rank") * F.col("wt") / F.col("tw")).alias("contrib"),
         )
         r = (
-            nodes.join(contrib, nodes["node"] == contrib["cnode"], "left")
+            nodes.join(contrib, "node", "left")
             .select(
                 "node",
                 F.round(

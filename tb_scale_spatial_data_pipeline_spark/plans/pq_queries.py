@@ -318,7 +318,6 @@ def _sql_pq_rerank() -> str:
 @_q("pq_rerank_search", _sql_pq_rerank())
 def q_pq_rerank_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..ml.pq import (
-        _dlit,
         _sub_dist2_sql,
         pq_adc_search,
         pq_codebooks_from_first_k,

@@ -40,6 +40,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..operators.graphs import aggregate_messages, directed_edges
 from ..operators.spread import broadcast_if_small
 from ._util import t, registry
 from .graph_queries import _SQL_EDGES as _EDGES_CTE
@@ -948,12 +949,7 @@ def _sql_wl() -> str:
 
 @_q("weisfeiler_leman_colors", _sql_wl())
 def q_weisfeiler_leman_colors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    eu = _undirected_edges(spark, sf_dir)
-    edges = (
-        eu.select(F.col("u").alias("src"), F.col("v").alias("dst"))
-        .unionByName(eu.select(F.col("v").alias("src"), F.col("u").alias("dst")))
-        .localCheckpoint(eager=True)
-    )
+    edges = directed_edges(_undirected_edges(spark, sf_dir))
     colors = (
         edges.groupBy(F.col("src").alias("node"))
         .agg(
@@ -970,25 +966,20 @@ def q_weisfeiler_leman_colors(spark: SparkSession, sf_dir: str) -> DataFrame:
     for _ in range(_WL_ROUNDS):
         prev = rounds[-1]
         nbr_hash = F.conv(F.substring(F.md5("c"), 1, 14), 16, 10).cast("bigint")
-        # broadcast the (node, color) table: node metadata, ~40 B/node
-        # of data, size-guarded (past ~8M nodes the forced relation
-        # would head toward the 8 GB broadcast cap, so the join
-        # degrades to a shuffle) — while the guard holds the per-round
-        # refinement never exchanges the edge table (guide §3.1), only
-        # the per-dst aggregate shuffles.
-        sig = (
-            edges.join(broadcast_if_small(prev, n_edges), prev.node == edges.src)
-            .groupBy(F.col("dst").alias("node"))
-            .agg(
-                F.sum(nbr_hash.cast("decimal(38,0)"))
-                .cast("decimal(38,0)")
-                .alias("sig")
-            )
+        # the (node, color) table is node metadata, ~40 B/node of data
+        sig = aggregate_messages(
+            edges,
+            prev,
+            n_edges,
+            F.sum(nbr_hash.cast("decimal(38,0)")).cast("decimal(38,0)").alias("sig"),
         )
         nxt = (
             # broadcast the per-round signature vector too (same
-            # n_edges size guard): prev is an RDD checkpoint with no
-            # stats, so this join otherwise shuffles BOTH node-sized
+            # n_edges size guard). A checkpoint keeps the size estimate
+            # of the plan it came from: usable when scan-rooted, but
+            # exploded for vectors built by joins like sig and prev
+            # (Spark 4.1.2 put a 100k-node vector at 442 TiB after one
+            # round), so unhinted this join shuffles BOTH node-sized
             # sides every round (2 of the 3 per-round exchanges)
             prev.join(broadcast_if_small(sig, n_edges), "node")
             .select(

@@ -92,13 +92,6 @@ def _spark_bloom_pos(col, offset: int):
     )
 
 
-def _sql_bloom_pos(expr: str, offset: int) -> str:
-    return (
-        f"CAST(('0x' || substring(md5(CAST({expr} AS VARCHAR)),"
-        f" {1 + offset}, 7)) AS BIGINT) % {_BLOOM_M}"
-    )
-
-
 @_q(
     "bloom_prefilter_join",
     # THE PLAIN JOIN: equality with the bloom-prefiltered plan proves

@@ -497,6 +497,142 @@ def test_co_occurrence_pairs_matches_join_form(spark, grouping):
         assert max(r[2] for r in got_set) > 1  # counts, not just pairs
 
 
+# A path 1-2-3-4, a triangle 10-11-12 and a lone edge 20-21, held
+# canonically (u < v) with a carried weight w = u + v.
+_SMALL_GRAPH = [(1, 2), (2, 3), (3, 4), (10, 11), (11, 12), (10, 12), (20, 21)]
+
+
+def _small_eu(spark):
+    return spark.createDataFrame(
+        [(u, v, u + v) for u, v in _SMALL_GRAPH], "u long, v long, w long"
+    )
+
+
+@pytest.mark.parametrize("carry", [(), ("w",)], ids=["plain", "weighted"])
+def test_directed_edges_matches_inline_form(spark, carry):
+    """directed_edges must return exactly the inline two-select union
+    it replaced: both directions of every edge, carried columns kept."""
+    from pyspark.sql import functions as F
+
+    from tb_scale_spatial_data_pipeline_spark.operators.graphs import directed_edges
+
+    eu = _small_eu(spark)
+    ref = eu.select(F.col("u").alias("src"), F.col("v").alias("dst"), *carry).union(
+        eu.select(F.col("v").alias("src"), F.col("u").alias("dst"), *carry)
+    )
+    got = directed_edges(eu, *carry)
+    assert got.columns == ["src", "dst", *carry]
+    rows = sorted(got.collect())
+    assert rows == sorted(ref.collect()) and len(rows) == 2 * len(_SMALL_GRAPH)
+
+
+@pytest.mark.parametrize("by", [(), ("label",)], ids=["node", "node_label"])
+def test_aggregate_messages_matches_inline_form(spark, by):
+    """One aggregate_messages round must equal the inline vector join +
+    per-dst groupBy it replaced, with and without extra group keys."""
+    from pyspark.sql import functions as F
+
+    from tb_scale_spatial_data_pipeline_spark.operators.graphs import (
+        aggregate_messages,
+        directed_edges,
+    )
+
+    edges = directed_edges(_small_eu(spark))
+    vec = edges.select(F.col("src").alias("node")).distinct().select(
+        "node", (F.col("node") * 0.5).alias("x"), (F.col("node") % 3).alias("label")
+    )
+    aggs = [F.sum("x").alias("s"), F.count(F.lit(1)).alias("c")]
+    ref = (
+        edges.join(vec, vec["node"] == edges["src"])
+        .groupBy(F.col("dst").alias("node"), *by)
+        .agg(*aggs)
+    )
+    got = aggregate_messages(edges, vec, 100, *aggs, by=by[0] if by else ())
+    assert got.columns == ref.columns
+    rows = sorted(got.collect())
+    assert rows == sorted(ref.collect()) and len(rows) > 0
+
+
+def _python_bfs(starts, max_hops):
+    adj: dict[int, set[int]] = {}
+    for u, v in _SMALL_GRAPH:
+        adj.setdefault(u, set()).add(v)
+        adj.setdefault(v, set()).add(u)
+    out = set()
+    for seed in starts:
+        dist = {seed: 0}
+        frontier = [seed]
+        for k in range(1, max_hops + 1):
+            frontier = sorted({n for f in frontier for n in adj[f]} - set(dist))
+            dist.update({n: k for n in frontier})
+        out |= {(seed, n, d) for n, d in dist.items()}
+    return out
+
+
+@pytest.mark.parametrize(
+    "keys,starts,max_hops,levels",
+    [
+        # the frontier from 1 is empty at level 4: exit long before 10
+        (("node",), [1], 10, 4),
+        # seeds 1 and 3 share the path: settled per seed, not per node
+        (("seed", "node"), [1, 3, 10], 10, 4),
+        # the hop cap cuts the path: every level runs
+        (("node",), [1], 2, 2),
+    ],
+    ids=["node", "seed_node", "node_capped"],
+)
+def test_bfs_levels_matches_reference(spark, monkeypatch, keys, starts, max_hops, levels):
+    """bfs_levels must return the min-hop distances of a plain BFS
+    within the hop cap, per seed when keyed by (seed, node), and stop
+    probing levels at the first empty frontier."""
+    from pyspark.sql import functions as F
+
+    from tb_scale_spatial_data_pipeline_spark.operators.graphs import (
+        bfs_levels,
+        directed_edges,
+    )
+
+    edges = directed_edges(_small_eu(spark))
+    start = spark.createDataFrame([(s,) for s in starts], "node long")
+    if keys == ("seed", "node"):
+        start = start.select(F.col("node").alias("seed"), "node")
+    probes = []
+    is_empty = type(edges).isEmpty
+
+    def counting_is_empty(df):
+        probes.append(1)
+        return is_empty(df)
+
+    monkeypatch.setattr(type(edges), "isEmpty", counting_is_empty)
+    got = bfs_levels(edges, start, max_hops, keys=keys)
+    assert got.columns == [*keys, "d"]
+    rows = got.collect()
+    if keys == ("node",):
+        got_set = {(starts[0], r["node"], r["d"]) for r in rows}
+    else:
+        got_set = {(r["seed"], r["node"], r["d"]) for r in rows}
+    assert len(rows) == len(got_set)  # one row per (key, node)
+    assert got_set == _python_bfs(starts, max_hops)
+    assert len(probes) == levels
+
+
+def test_no_inline_edge_symmetrization_in_plans():
+    """Every directed edge table comes from operators/graphs.py::
+    directed_edges; a hand-copied symmetrization under plans/ would
+    carry its own checkpoint policy again."""
+    import pathlib
+
+    from tb_scale_spatial_data_pipeline_spark import plans
+
+    copy = 'F.col("v").alias("src"), F.col("u").alias("dst")'
+    hits = [
+        p.name
+        for p in pathlib.Path(plans.__file__).parent.glob("*.py")
+        if copy in p.read_text()
+    ]
+    assert hits == []
+
+
 def test_adamic_adar_equi_joins_only(spark):
     """AA's wedge enumeration must plan as equi joins on the wedge
     center — never a cartesian of the edge set (the one permitted
