@@ -23,11 +23,13 @@ Usage:
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 import traceback
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from tb_scale_spatial_data_pipeline_spark.session import get_spark
 

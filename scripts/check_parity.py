@@ -12,6 +12,7 @@ diagnostics). Usage:
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 import traceback
@@ -20,7 +21,8 @@ import duckdb
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from tb_scale_spatial_data_pipeline_spark.session import get_spark
 from tb_scale_spatial_data_pipeline_spark.sources.catalog import TABLES
@@ -118,7 +120,6 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
 
-    sys.path.insert(0, "/root/repo")
     import __spark_entry__ as entrymod
 
     qs = entrymod.queries()

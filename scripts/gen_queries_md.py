@@ -4,9 +4,11 @@ queries so the doc never drifts from the code)."""
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from tb_scale_spatial_data_pipeline_spark import plans
 from tb_scale_spatial_data_pipeline_spark.plans import all_oracles, all_queries
@@ -60,7 +62,7 @@ def main() -> None:
     ]
     for old, new in sorted(plans.RETIRED_NAMES.items()):
         lines.append(f"- `{old}` → `{new}`")
-    with open("/root/repo/QUERIES.md", "w") as f:
+    with open(os.path.join(REPO, "QUERIES.md"), "w") as f:
         f.write("\n".join(lines) + "\n")
     print(
         f"QUERIES.md: {len(queries)} queries ({n_oracle} oracle, "

@@ -10,10 +10,12 @@ Usage: python scripts/probe_r15_scale.py [name ...]
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from tb_scale_spatial_data_pipeline_spark.plans import all_queries
 from tb_scale_spatial_data_pipeline_spark.session import get_spark

@@ -9,29 +9,41 @@ for the reference's temp-file discipline.
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import os
+import pathlib
 import tempfile
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-# Bump when pipeline-stage SEMANTICS change, so stale on-disk stage
-# products from an older code revision can never be read back.
-STAGE_CACHE_VERSION = "r15b"
+
+@functools.cache
+def source_digest() -> str:
+    """sha1 of the package's .py sources (relative path + bytes),
+    computed once per process: any code edit yields a new digest, so a
+    stage product built by an older tree is never read back."""
+    pkg = pathlib.Path(__file__).resolve().parent.parent
+    h = hashlib.sha1()
+    for p in sorted(pkg.rglob("*.py")):
+        h.update(str(p.relative_to(pkg)).encode() + b"\0")
+        h.update(p.read_bytes())
+    return h.hexdigest()
 
 
 def stage_root(sf_dir: str) -> str:
-    """Deterministic per-(fixture dir, code version) stage-cache root.
+    """Deterministic per-(fixture dir, package source) stage-cache root.
 
     The reference keys its exists-skip products by output filename
     under a fixed work dir (`0_preprocessing/feature_stacking.py:261`);
     the engine's equivalent is a content-addressed directory under the
     system temp root, shared by every pipeline query in (and across)
-    processes so common stages are computed exactly once per fixture.
+    processes so common stages are computed exactly once per fixture
+    and code revision.
     """
     key = hashlib.sha1(
-        f"{os.path.abspath(sf_dir)}|{STAGE_CACHE_VERSION}".encode()
+        f"{os.path.abspath(sf_dir)}|{source_digest()}".encode()
     ).hexdigest()[:12]
     return os.path.join(tempfile.gettempdir(), "tb_stage_cache", key)
 

@@ -1,12 +1,15 @@
 """Tiled raster kernels as Arrow-batched applyInPandas (SURVEY §2.6).
 
-Each kernel receives one tile group (core + halo rows from
-``halo_duplicate``), pivots the long-format pixels to a dense 2-D
-array, runs vectorized NumPy, and emits core rows only. This is the
-Spark mapping of the reference's tiled-buffer architecture
-(`2_segmentation/image_segmentation.py:122-149`): the halo kills
-tile-edge artifacts; the core crop guarantees each output pixel is
-produced exactly once.
+Each kernel is vectorized NumPy over one dense tile window (core +
+halo rows from ``halo_duplicate``). The tile runner in ``tiles.py``
+owns the rest: ``tile_map`` runs the tile ``groupBy``, pivots the
+long-format pixels to the dense array and crops the kernel's output to
+the ghost-cell core; the warp goes through ``tile_apply``, the same
+runner without the crop, and keeps core ownership through its anchor
+pixel. This is the Spark mapping of the reference's tiled-buffer
+architecture (`2_segmentation/image_segmentation.py:122-149`): the
+halo kills tile-edge artifacts; the core crop guarantees each output
+pixel is produced exactly once.
 
 No imaging libraries are required: gaussian is a separable NumPy
 convolution, PCA is an SVD, reprojection is affine grid sampling.
@@ -22,21 +25,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _tile_to_arrays(pdf: pd.DataFrame, value_cols: list[str]):
-    """Pivot long-format pixel rows to dense (H, W, C); returns
-    (stack, x0, y0, core_mask)."""
-    x0, y0 = int(pdf["x"].min()), int(pdf["y"].min())
-    w = int(pdf["x"].max()) - x0 + 1
-    h = int(pdf["y"].max()) - y0 + 1
-    stack = np.full((h, w, len(value_cols)), np.nan, dtype=np.float64)
-    core = np.zeros((h, w), dtype=bool)
-    xi = pdf["x"].to_numpy() - x0
-    yi = pdf["y"].to_numpy() - y0
-    for c, col in enumerate(value_cols):
-        stack[yi, xi, c] = pdf[col].to_numpy()
-    core[yi, xi] = pdf["is_core"].to_numpy()
-    return stack, x0, y0, core
+from .tiles import tile_apply, tile_map
 
 
 def _gaussian_kernel1d(sigma: float) -> np.ndarray:
@@ -78,20 +67,11 @@ def gaussian_smooth_tiles(
     Requires halo >= ceil(3*sigma) for exact tile-origin invariance."""
     out_schema = "x int, y int, " + ", ".join(f"{c} double" for c in value_cols)
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        stack, x0, y0, core = _tile_to_arrays(pdf, value_cols)
+    def smooth(stack, tile_key):
         k = _gaussian_kernel1d(sigma)
-        sm = np.stack([_convolve_sep(stack[:, :, c], k) for c in range(stack.shape[2])], axis=-1)
-        ys, xs = np.nonzero(core)
-        data = {"x": xs + x0, "y": ys + y0}
-        for c, col in enumerate(value_cols):
-            data[col] = sm[ys, xs, c]
-        return pd.DataFrame(data)
+        return {col: _convolve_sep(stack[:, :, c], k) for c, col in enumerate(value_cols)}
 
-    return (
-        tiled.groupBy("tile_x", "tile_y")
-        .applyInPandas(kernel, schema=out_schema)
-    )
+    return tile_map(tiled, value_cols, out_schema, smooth)
 
 
 def pca_texture_tiles(tiled: DataFrame, value_cols: list[str]) -> DataFrame:
@@ -221,6 +201,30 @@ def reproject_tiles(
     )
 
 
+def affine_transform(affine: tuple[float, float, float, float, float, float]):
+    """Build the (target_to_source, source_to_target) callable pair for
+    :func:`warp_grid_tiles` from ``affine = (a, b, c, d, e, f)``, the
+    TARGET→SOURCE transform (the inverse grid transform, exactly what
+    warp resampling needs):
+
+        sx = a*tx + b*ty + c
+        sy = d*tx + e*ty + f
+
+    The transform must be invertible (|det| > 0).
+    """
+    a, b, c, d, e, f = (float(v) for v in affine)
+    det = a * e - b * d
+    if abs(det) < 1e-12:
+        raise ValueError(f"affine transform is singular: {affine}")
+    return (
+        lambda tx, ty: (a * tx + b * ty + c, d * tx + e * ty + f),
+        lambda sx, sy: (
+            (e * (sx - c) - b * (sy - f)) / det,
+            (-d * (sx - c) + a * (sy - f)) / det,
+        ),
+    )
+
+
 def warp_affine_tiles(
     tiled: DataFrame,
     value_cols: list[str],
@@ -230,71 +234,12 @@ def warp_affine_tiles(
     """R1 (general form): affine CRS warp between pixel grids — the
     engine's mapping of the reference's rasterio ``reproject`` between
     genuinely different CRSs (`0_preprocessing/feature_stacking.py:72-102`).
-
-    ``affine = (a, b, c, d, e, f)`` is the TARGET→SOURCE transform
-    (the inverse grid transform, exactly what warp resampling needs):
-
-        sx = a*tx + b*ty + c
-        sy = d*tx + e*ty + f
-
-    Rotation/shear are fully supported (b, d ≠ 0). Distribution shape:
-    each source tile inverts the affine over its own core bounding box
-    to enumerate exactly the target pixels it could own, samples them,
-    and emits only those whose anchor source pixel falls in its core —
-    every target pixel is produced exactly once, no global raster is
-    ever assembled, and tiles never communicate (the halo from
-    ``halo_duplicate`` supplies the cross-tile sampling footprint).
-    The transform must be invertible (|det| > 0).
-    """
-    a, b, c, d, e, f = (float(v) for v in affine)
-    det = a * e - b * d
-    if abs(det) < 1e-12:
-        raise ValueError(f"affine transform is singular: {affine}")
-    pad = {"nearest": 1.0, "bilinear": 2.0, "cubic": 3.0}[method]
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        stack, x0, y0, core = _tile_to_arrays(pdf, value_cols)
-        ys, xs = np.nonzero(core)
-        if len(xs) == 0:  # halo-only border group: nothing to own
-            return pd.DataFrame({k: [] for k in ["x", "y", *value_cols]})
-        gx = xs + x0
-        gy = ys + y0
-        # preimage of the core bbox corners under the inverse affine
-        # bounds the target pixels this tile can own
-        cx = np.array([gx.min(), gx.max()], dtype=np.float64)
-        cy = np.array([gy.min(), gy.max()], dtype=np.float64)
-        CX, CY = np.meshgrid(cx, cy)
-        inv_tx = (e * (CX - c) - b * (CY - f)) / det
-        inv_ty = (-d * (CX - c) + a * (CY - f)) / det
-        tx_lo = int(np.floor(inv_tx.min() - pad))
-        tx_hi = int(np.ceil(inv_tx.max() + pad))
-        ty_lo = int(np.floor(inv_ty.min() - pad))
-        ty_hi = int(np.ceil(inv_ty.max() + pad))
-        TX, TY = np.meshgrid(
-            np.arange(tx_lo, tx_hi + 1), np.arange(ty_lo, ty_hi + 1)
-        )
-        tx = TX.ravel().astype(np.float64)
-        ty = TY.ravel().astype(np.float64)
-        sx = a * tx + b * ty + c
-        sy = d * tx + e * ty + f
-        h, w, _ = stack.shape
-        keep = (sx >= x0) & (sx <= x0 + w - 1) & (sy >= y0) & (sy <= y0 + h - 1)
-        sx, sy, tx, ty = sx[keep], sy[keep], tx[keep], ty[keep]
-        core_ok, data = _sample_at(stack, core, x0, y0, sx, sy, method, value_cols)
-        out = {"x": tx[core_ok].astype(int), "y": ty[core_ok].astype(int)}
-        for col in value_cols:
-            out[col] = np.asarray(data[col])[core_ok]
-        return pd.DataFrame(out)
-
-    out_schema = "x int, y int, " + ", ".join(f"{c} double" for c in value_cols)
-    out = tiled.groupBy("tile_x", "tile_y").applyInPandas(kernel, schema=out_schema)
-    # Core ownership is exactly-once by construction (each target pixel's
-    # anchor source pixel lies in exactly one tile core). Reduce with a
-    # DETERMINISTIC min instead of dropDuplicates so that if a transform
-    # ever exceeded its bound and double-owned a pixel, the result stays
-    # stable run-to-run (and uniqueness tests can catch the violation)
-    # rather than keeping a silently arbitrary row.
-    return out.groupBy("x", "y").agg(*[F.min(c).alias(c) for c in value_cols])
+    ``affine`` is the TARGET→SOURCE transform of
+    :func:`affine_transform`; rotation/shear are fully supported
+    (b, d ≠ 0). Runs :func:`warp_grid_tiles`, whose bounding lattice
+    includes the corners of the widened core box: for an affine map
+    its image bounds every target pixel a tile can own."""
+    return warp_grid_tiles(tiled, value_cols, *affine_transform(affine), method=method)
 
 
 def projective_transform(
@@ -342,19 +287,20 @@ def warp_grid_tiles(
     """R1 (non-affine form): callable-grid warp — the engine's analog of
     true CRS reprojection (`0_preprocessing/feature_stacking.py:86-96`),
     where the pixel-grid mapping between datums/projections is curved,
-    not affine. :func:`warp_affine_tiles` covers rotation/shear; this
-    path accepts an arbitrary smooth, invertible coordinate mapping
+    not affine (:func:`warp_affine_tiles` is its affine front end). It
+    accepts an arbitrary smooth, invertible coordinate mapping
     (projective homography, thin-plate spline, a pyproj Transformer
     closure, ...) given as a pair of vectorized callables:
 
         target_to_source(tx, ty) -> (sx, sy)   # sampling direction
         source_to_target(sx, sy) -> (tx, ty)   # bounding direction
 
-    Distribution shape (same exactly-once ownership as the affine
-    path): each source tile forward-maps a ``boundary_samples``²
-    lattice over its core bounding box to bound the target pixels it
-    could own (corners alone under-cover curved maps — the lattice plus
-    ``bound_pad`` covers bounded curvature), enumerates those integer
+    Distribution shape: each source tile forward-maps a ``boundary_samples``²
+    lattice over its core bounding box, widened by one source pixel (a
+    sample whose anchor pixel is in the core lies less than one pixel
+    beyond it), to bound the target pixels it could own (corners alone
+    under-cover curved maps — the lattice plus ``bound_pad`` covers
+    bounded curvature), enumerates those integer
     target pixels, samples them through ``target_to_source``, and emits
     only pixels whose anchor source pixel lies in its core. Tiles never
     communicate; no global raster is assembled; the halo supplies the
@@ -367,17 +313,12 @@ def warp_grid_tiles(
     if n < 2:
         raise ValueError("boundary_samples must be >= 2")
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        stack, x0, y0, core = _tile_to_arrays(pdf, value_cols)
-        ys, xs = np.nonzero(core)
-        if len(xs) == 0:  # halo-only border group: nothing to own
-            return pd.DataFrame({k: [] for k in ["x", "y", *value_cols]})
-        gx = xs + x0
-        gy = ys + y0
-        # forward-map a lattice over the core bbox to bound owned targets
+    def warp(stack, tile_key, x0, y0, core):
+        rows = np.flatnonzero(core.any(axis=1)) + y0
+        cols = np.flatnonzero(core.any(axis=0)) + x0
         LX, LY = np.meshgrid(
-            np.linspace(gx.min(), gx.max(), n),
-            np.linspace(gy.min(), gy.max(), n),
+            np.linspace(cols[0] - 1, cols[-1] + 1, n),
+            np.linspace(rows[0] - 1, rows[-1] + 1, n),
         )
         fwd_tx, fwd_ty = source_to_target(LX.ravel(), LY.ravel())
         tx_lo = int(np.floor(np.min(fwd_tx) - pad))
@@ -399,10 +340,10 @@ def warp_grid_tiles(
         out = {"x": tx[core_ok].astype(int), "y": ty[core_ok].astype(int)}
         for col in value_cols:
             out[col] = np.asarray(data[col])[core_ok]
-        return pd.DataFrame(out)
+        return out
 
     out_schema = "x int, y int, " + ", ".join(f"{c} double" for c in value_cols)
-    out = tiled.groupBy("tile_x", "tile_y").applyInPandas(kernel, schema=out_schema)
+    out = tile_apply(tiled, value_cols, out_schema, warp)
     # Core ownership is exactly-once by construction (each target pixel's
     # anchor source pixel lies in exactly one tile core). Reduce with a
     # DETERMINISTIC min instead of dropDuplicates so that if a transform
@@ -437,8 +378,7 @@ def terrain_tiles(
         "x int, y int, slope_deg double, aspect_deg double, hillshade double"
     )
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        stack, x0, y0, core = _tile_to_arrays(pdf, [dem_col])
+    def terrain(stack, tile_key):
         z = stack[:, :, 0]
         zp = np.pad(z, 1, mode="edge")
         a, b, c = zp[:-2, :-2], zp[:-2, 1:-1], zp[:-2, 2:]
@@ -465,20 +405,9 @@ def terrain_tiles(
             + np.sin(zen_rad) * np.sin(slope_rad) * np.cos(az_rad - asp_rad)
         )
         hs = np.clip(hs, 0.0, 255.0)
-        ys, xs = np.nonzero(core)
-        return pd.DataFrame(
-            {
-                "x": xs + x0,
-                "y": ys + y0,
-                "slope_deg": slope_deg[ys, xs],
-                "aspect_deg": aspect[ys, xs],
-                "hillshade": hs[ys, xs],
-            }
-        )
+        return {"slope_deg": slope_deg, "aspect_deg": aspect, "hillshade": hs}
 
-    return tiled.groupBy("tile_x", "tile_y").applyInPandas(
-        kernel, schema=out_schema
-    )
+    return tile_map(tiled, [dem_col], out_schema, terrain)
 
 
 # ESRI D8 direction codes, ascending: E, SE, S, SW, W, NW, N, NE.
@@ -519,8 +448,7 @@ def d8_flow_tiles(
     """
     out_schema = "x int, y int, flow_dir int, max_drop double"
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        stack, x0, y0, core = _tile_to_arrays(pdf, [dem_col])
+    def d8(stack, tile_key):
         z = stack[:, :, 0]
         zp = np.pad(z, 1, mode="edge")
         h, w = z.shape
@@ -534,19 +462,9 @@ def d8_flow_tiles(
             bdir = np.where(upd, code, bdir)
         flow = np.where(best > 0, bdir, 0)
         md = np.where(best > 0, best, 0.0)
-        ys, xs = np.nonzero(core)
-        return pd.DataFrame(
-            {
-                "x": xs + x0,
-                "y": ys + y0,
-                "flow_dir": flow[ys, xs].astype("int32"),
-                "max_drop": md[ys, xs],
-            }
-        )
+        return {"flow_dir": flow.astype("int32"), "max_drop": md}
 
-    return tiled.groupBy("tile_x", "tile_y").applyInPandas(
-        kernel, schema=out_schema
-    )
+    return tile_map(tiled, [dem_col], out_schema, d8)
 
 
 def morphology_open_tiles(tiled: DataFrame, value_col: str = "b1") -> DataFrame:
@@ -567,8 +485,7 @@ def morphology_open_tiles(tiled: DataFrame, value_col: str = "b1") -> DataFrame:
     """
     out_schema = "x int, y int, opened double, tophat double"
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        stack, x0, y0, core = _tile_to_arrays(pdf, [value_col])
+    def open_tophat(stack, tile_key):
         v = _round_half_away(stack[:, :, 0])
         h, w = v.shape
 
@@ -583,16 +500,6 @@ def morphology_open_tiles(tiled: DataFrame, value_col: str = "b1") -> DataFrame:
         eroded = focal(v, np.minimum)
         opened = focal(eroded, np.maximum)
         top = _round_half_away(v - opened)
-        ys, xs = np.nonzero(core)
-        return pd.DataFrame(
-            {
-                "x": xs + x0,
-                "y": ys + y0,
-                "opened": opened[ys, xs],
-                "tophat": top[ys, xs],
-            }
-        )
+        return {"opened": opened, "tophat": top}
 
-    return tiled.groupBy("tile_x", "tile_y").applyInPandas(
-        kernel, schema=out_schema
-    )
+    return tile_map(tiled, [value_col], out_schema, open_tophat)

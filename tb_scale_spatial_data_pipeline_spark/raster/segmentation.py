@@ -5,10 +5,12 @@ R4/R6/R7, P18).
 segmentation (public algorithm: sort 4-connectivity edges by feature
 distance; union–find merge when the edge weight is below both
 components' internal-difference + scale/|C| threshold; then absorb
-components below min_size) per tile over the halo-extended window and
-crops to the core — the reference's exact tiling strategy
+components below min_size) per tile over the halo-extended window —
+the reference's exact tiling strategy
 (`2_segmentation/image_segmentation.py:28-29,142-149`, scale=35,
-min_size=15).
+min_size=15). The tile runner ``tiles.py::tile_map`` owns the tile
+``groupBy``, the pivot to a dense window and the crop of the labels to
+the ghost-cell core.
 
 Global segment ids use the order-free deterministic scheme from
 SURVEY §7 P18 — ``(tile_y * 10^6 + tile_x) * 10^7 + local_label`` —
@@ -37,6 +39,8 @@ import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
+
+from .tiles import tile_map
 
 
 def _felzenszwalb(img: np.ndarray, scale: float, min_size: int) -> np.ndarray:
@@ -109,28 +113,14 @@ def segment_tiles(
     """R4: per-tile segmentation over halo windows; output core pixels
     with deterministic global segment ids (x, y, seg_id)."""
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        tx = int(pdf["tile_x"].iloc[0])
-        ty = int(pdf["tile_y"].iloc[0])
-        x0, y0 = int(pdf["x"].min()), int(pdf["y"].min())
-        w = int(pdf["x"].max()) - x0 + 1
-        h = int(pdf["y"].max()) - y0 + 1
-        stack = np.zeros((h, w, len(value_cols)), dtype=np.float64)
-        core = np.zeros((h, w), dtype=bool)
-        xi = pdf["x"].to_numpy() - x0
-        yi = pdf["y"].to_numpy() - y0
-        for c, col in enumerate(value_cols):
-            stack[yi, xi, c] = np.nan_to_num(pdf[col].to_numpy(), nan=0.0)
-        core[yi, xi] = pdf["is_core"].to_numpy()
-        labels = _felzenszwalb(stack, scale, min_size)
-        ys, xs = np.nonzero(core)
-        local = labels[ys, xs].astype(np.int64)
-        gid = (np.int64(ty) * 1_000_000 + tx) * 10_000_000 + local
-        return pd.DataFrame({"x": xs + x0, "y": ys + y0, "seg_id": gid})
+    def segment(stack, tile_key):
+        tx, ty = tile_key
+        # NaN values and pixels missing from the window segment as 0
+        labels = _felzenszwalb(np.nan_to_num(stack, nan=0.0), scale, min_size)
+        gid = (np.int64(ty) * 1_000_000 + tx) * 10_000_000 + labels.astype(np.int64)
+        return {"seg_id": gid}
 
-    return tiled.groupBy("tile_x", "tile_y").applyInPandas(
-        kernel, schema="x int, y int, seg_id long"
-    )
+    return tile_map(tiled, value_cols, "x int, y int, seg_id long", segment)
 
 
 def trace_boundary(mask: np.ndarray) -> list[tuple[int, int]] | None:

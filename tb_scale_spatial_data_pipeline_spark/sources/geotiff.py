@@ -35,6 +35,8 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..raster.tiles import pivot_tile
+
 try:  # optional geospatial dependency — absent in this container
     import rasterio as _rasterio
 except ImportError:  # pragma: no cover
@@ -434,14 +436,8 @@ def tile_table_to_tiff(
     pdf = df.select("x", "y", *value_cols).toPandas()  # bounded: max_rows guard above
     if pdf.empty:
         raise ValueError("empty tile table")
-    x0, y0 = int(pdf["x"].min()), int(pdf["y"].min())
-    w = int(pdf["x"].max()) - x0 + 1
-    h = int(pdf["y"].max()) - y0 + 1
-    arr = np.full((h, w, len(value_cols)), fill, dtype=np.float64)
-    xi = pdf["x"].to_numpy() - x0
-    yi = pdf["y"].to_numpy() - y0
-    for i, cname in enumerate(value_cols):
-        arr[yi, xi, i] = pdf[cname].to_numpy(dtype=np.float64)
+    arr, _, _ = pivot_tile(pdf, value_cols, fill)
+    h, w, _ = arr.shape
     if _rasterio is not None:  # pragma: no cover - rasterio not in container
         with _rasterio.open(
             path,

@@ -11,9 +11,6 @@ invariant set survives."""
 from __future__ import annotations
 
 import json
-import sys
-
-sys.path.insert(0, "/root/repo")
 
 from bench import HEADLINE, STABLE_FIELDS, contract_line
 

@@ -633,6 +633,48 @@ def test_no_inline_edge_symmetrization_in_plans():
     assert hits == []
 
 
+def test_one_tile_runner():
+    """The long-rows -> dense pivot and the ghost-cell core crop live
+    once, in raster/tiles.py, and so does the tile groupBy; the only
+    other tile groupBy is pca_texture_tiles, a per-tile fit over the
+    core rows that never pivots."""
+    import pathlib
+
+    import tb_scale_spatial_data_pipeline_spark as pkg
+
+    def sites(text):
+        return [
+            str(p.relative_to(pathlib.Path(pkg.__file__).parent))
+            for p in sorted(pathlib.Path(pkg.__file__).parent.rglob("*.py"))
+            for _ in range(p.read_text().count(text))
+        ]
+
+    assert sites('int(pdf["x"].min())') == ["raster/tiles.py"]
+    assert sites("np.nonzero(core)") == ["raster/tiles.py"]
+    assert sites('groupBy("tile_x", "tile_y").applyInPandas') == [
+        "raster/kernels.py",  # pca_texture_tiles
+        "raster/tiles.py",
+    ]
+
+
+def test_no_fixed_repo_path_on_sys_path():
+    """Scripts and tests find the package next to themselves: a fixed
+    absolute checkout path on sys.path makes a run from any other
+    checkout import that checkout's package instead of its own."""
+    import pathlib
+    import re
+
+    root = pathlib.Path(__file__).resolve().parent.parent
+    fixed = re.compile(r"sys\.path\.insert\(\s*0\s*,\s*[\"']/")
+    hits = [
+        str(p.relative_to(root))
+        for d in ("scripts", "tests")
+        for p in sorted((root / d).glob("*.py"))
+        if fixed.search(p.read_text())
+    ]
+    assert hits == []
+
+
 def test_adamic_adar_equi_joins_only(spark):
     """AA's wedge enumeration must plan as equi joins on the wedge
     center — never a cartesian of the edge set (the one permitted

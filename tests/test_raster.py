@@ -47,6 +47,32 @@ def test_halo_duplicate_core_partition(spark, raster):
     assert tiled.count() > raster.count()
 
 
+def test_tile_map_emits_each_core_pixel_once_and_skips_halo_only_groups(spark):
+    """46 px is not a multiple of the 16 px tile, so halo_duplicate
+    makes halo-only groups past the raster edge (tile index 3). The
+    runner must emit every raster pixel exactly once, from its core
+    tile, and never call the kernel on a halo-only group."""
+    from tb_scale_spatial_data_pipeline_spark.raster.tiles import tile_map
+
+    img = synthetic_raster(spark, 46, 46, bands=1)
+    tiled = halo_duplicate(img, 16, 4)
+    halo_only = tiled.where("tile_x = 3 or tile_y = 3")
+    assert halo_only.count() > 0
+    assert halo_only.where("is_core").count() == 0
+
+    def ident(stack, tile_key):
+        if 3 in tile_key:
+            raise ValueError(f"kernel called on halo-only tile {tile_key}")
+        return {"v": stack[:, :, 0], "tx": np.full(stack.shape[:2], tile_key[0])}
+
+    out = tile_map(tiled, ["b1"], "x int, y int, v double, tx int", ident).toPandas()
+    assert len(out) == 46 * 46
+    assert not out.duplicated(["x", "y"]).any()
+    assert (out["tx"] == out["x"] // 16).all()
+    src = _to_map(img, ["b1"])
+    assert {(r.x, r.y): (r.v,) for r in out.itertuples()} == src
+
+
 def test_gaussian_halo_invariance(spark, raster):
     # smoothing must be invariant to the tile grid (halo >= 3*sigma)
     a = gaussian_smooth_tiles(halo_duplicate(raster, 32, 4), ["b1", "b2"], sigma=0.5)
@@ -137,6 +163,25 @@ def test_warp_affine_translation_bilinear_exact_on_ramp(spark):
         sx, sy = r["x"] + 0.5, r["y"] + 0.25
         if 0 <= sx <= 39 and 0 <= sy <= 39:
             assert abs(r["b1"] - (2.0 * sx + 3.0 * sy + 1.0)) < 1e-9
+
+
+def test_warp_affine_upsampling_covers_every_target(spark):
+    """Upsampling maps (each source pixel spans ~4 and ~10 target pixels
+    across) must still emit every target pixel whose sample lies in the
+    raster: a tile's target bound has to cover the whole source pixel
+    beyond its core edge, whatever the scale, not a fixed pad of target
+    pixels around the image of the core corners."""
+    base = synthetic_raster(spark, 26, 22, bands=1)
+    for aff in [(0.25, 0.1, 0.0, -0.1, 0.25, 3.0), (0.1, 0.04, 0.0, -0.04, 0.1, 3.0)]:
+        a, b, c, d, e, f = aff
+        out = warp_affine_tiles(halo_duplicate(base, 8, 3), ["b1"], aff, "bilinear")
+        got = {(r["x"], r["y"]) for r in out.collect()}
+        TX, TY = np.meshgrid(np.arange(-400, 400), np.arange(-400, 400))
+        tx, ty = TX.ravel().astype(float), TY.ravel().astype(float)
+        sx, sy = a * tx + b * ty + c, d * tx + e * ty + f
+        inside = (sx >= 0) & (sx <= 25) & (sy >= 0) & (sy <= 21)
+        want = set(zip(TX.ravel()[inside].tolist(), TY.ravel()[inside].tolist()))
+        assert got == want, (aff, len(want - got), len(got - want))
 
 
 def test_warp_affine_tile_origin_invariance(spark):
@@ -283,6 +328,43 @@ def test_segment_tiles_cover_and_determinism(spark, raster):
     a = _to_map(segs, ["seg_id"])
     b = _to_map(segment_tiles(tiled, ["b1", "b2"]), ["seg_id"])
     assert a == b
+
+
+def test_segment_tiles_nan_and_missing_pixels_segment_as_zero(spark):
+    """NaN values, +inf and pixels missing from a tile window enter the
+    segmentation exactly as a zero-filled pivot with per-column
+    nan_to_num: the seg_ids equal that reference, tile by tile."""
+    img = synthetic_raster(spark, 40, 40, bands=2)
+    img = img.where("(x + 2 * y) % 13 != 0").select(
+        "x",
+        "y",
+        F.when((F.col("x") * 7 + F.col("y") * 3) % 11 == 0, F.lit(float("nan")))
+        .otherwise(F.col("b1"))
+        .alias("b1"),
+        F.when((F.col("x") == 5) & (F.col("y") == 9), F.lit(float("inf")))
+        .otherwise(F.col("b2"))
+        .alias("b2"),
+    )
+    tiled = halo_duplicate(img, 16, 4)
+    got = _to_map(segment_tiles(tiled, ["b1", "b2"]), ["seg_id"])
+
+    want = {}
+    for (tx, ty), pdf in tiled.toPandas().groupby(["tile_x", "tile_y"]):
+        x0, y0 = int(pdf["x"].min()), int(pdf["y"].min())
+        w = int(pdf["x"].max()) - x0 + 1
+        h = int(pdf["y"].max()) - y0 + 1
+        stack = np.zeros((h, w, 2))
+        xi, yi = pdf["x"].to_numpy() - x0, pdf["y"].to_numpy() - y0
+        for c, col in enumerate(["b1", "b2"]):
+            stack[yi, xi, c] = np.nan_to_num(pdf[col].to_numpy(), nan=0.0)
+        with np.errstate(over="ignore"):  # the +inf pixel's edge weights
+            labels = _felzenszwalb(stack, 35.0, 15)
+        for x, y, core in zip(xi, yi, pdf["is_core"]):
+            if core:
+                local = int(labels[y, x])
+                want[(x + x0, y + y0)] = ((int(ty) * 1_000_000 + int(tx)) * 10_000_000 + local,)
+    assert len(want) == img.count()
+    assert got == want
 
 
 def test_shape_metrics_rectangle(spark):

@@ -46,3 +46,18 @@ def test_materialize_stage_reuses(spark, tmp_path):
     # force=True rewrites
     out3 = materialize_stage(spark.range(5).withColumn("v", F.lit(0)), path, spark, force=True)
     assert out3.count() == 5
+
+
+def test_stage_root_keys_on_package_source(monkeypatch):
+    """A code edit must move the stage cache: stage products built by
+    an older tree are never read back by a newer one."""
+    from tb_scale_spatial_data_pipeline_spark.plans import checkpoint
+
+    digest = checkpoint.source_digest()
+    assert len(digest) == 40 and digest == checkpoint.source_digest()
+    before = checkpoint.stage_root("/data/sf0.01")
+    monkeypatch.setattr(checkpoint, "source_digest", lambda: "0" * 40)
+    after = checkpoint.stage_root("/data/sf0.01")
+    assert after != before
+    assert os.path.dirname(after) == os.path.dirname(before)
+    assert checkpoint.stage_root("/data/sf0.1") != after
