@@ -239,11 +239,11 @@ def connected_components(
     would silently "converge" after one round. Exhausting ``max_iter``
     without convergence raises rather than returning a partial
     labelling. ``localCheckpoint`` truncates the per-iteration lineage
-    so plans don't grow exponentially. For adversarial long-chain
-    graphs (not the dedup shape) the classic fix is large-star/
-    small-star contraction (Kiveris et al., "Connected Components in
-    MapReduce"), which this API could switch to without changing its
-    contract.
+    so plans don't grow exponentially. Adversarial long-chain graphs
+    (not the dedup shape) take :func:`connected_components_star`
+    instead: large-star/small-star contraction with the same contract
+    and O(log n) rounds. Callers pick by graph shape — this loop for
+    near-cliques, the star contraction for long or unknown chains.
 
     Fixed cost per call: the per-round broadcast guard is bounded by
     ``n_bound = 2 * e0.count()``, one extra (no-shuffle) job on the
@@ -314,7 +314,8 @@ def connected_components(
         raise RuntimeError(
             f"connected_components did not converge within max_iter={max_iter} "
             "iterations; the graph has components with diameter > max_iter "
-            "(raise max_iter, or switch to large-star/small-star contraction)"
+            "(raise max_iter, or call connected_components_star, the "
+            "large-star/small-star contraction, for long-chain graphs)"
         )
     return labels.select(F.col("node"), F.col("lbl").alias("cluster_id"))
 

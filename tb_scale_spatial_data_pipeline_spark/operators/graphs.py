@@ -27,19 +27,25 @@ customers sharing a part, parts sharing an order — built once per group
 as a sorted-array combination behind one per-group fan-out bound, and
 thinned to realistic sparsity by one md5 bucket predicate (`md5_thin`).
 
-Graph rounds. Three helpers own the policy of the iterative graph tier,
-so a change to it lands once instead of at every loop:
+Graph rounds. These helpers own the policy of the iterative graph tier,
+so a change to it lands once instead of at every loop. Every checkpoint
+they take is an eager `localCheckpoint(eager=True)`:
 
 - `directed_edges` symmetrizes undirected (u, v, *carry) edges into
-  (src, dst, *carry) with `unionByName` and materializes them with an
-  eager `localCheckpoint` — every caller reads the table more than once;
+  (src, dst, *carry) with `unionByName` and materializes them — every
+  caller reads the table more than once;
 - `aggregate_messages` is one neighbour-aggregation round: the
   per-round node vector joins the edge table behind the size-guarded
   broadcast (`broadcast_if_small`) and the messages group by dst;
+- `relax_min` runs fixed min-relaxation rounds (union the offers with
+  the held values, keep the min per node) behind the same guard;
 - `bfs_levels` is the level-synchronous frontier loop: one edge join,
   a distinct and an anti-join against the settled set per level, a
-  lazy `localCheckpoint` per level and an early exit on an empty
-  frontier.
+  checkpoint per level and an early exit on an empty frontier;
+- `brandes_forward` / `brandes_backward` are the two sweeps of
+  Brandes' betweenness from a seed set: shortest-path counts sigma per
+  BFS level, then the dependency join that yields both the per-node
+  deltas and the per-edge credits.
 """
 
 from __future__ import annotations
@@ -196,11 +202,13 @@ def bfs_levels(
 
     Per level: ONE edge join, a distinct, and an anti-join against the
     settled set — rows in flight are only the frontier. Each level is
-    a lazy checkpoint (its first read, the emptiness probe, runs it),
-    and the loop stops at the first empty frontier."""
+    an eager checkpoint, the emptiness probe reads the materialized
+    frontier, and the loop stops at the first empty frontier."""
     keys = list(keys)
     carried = [k for k in keys if k != "node"]
-    dist = start.select(*keys, F.lit(0).cast("bigint").alias("d")).localCheckpoint()
+    dist = start.select(*keys, F.lit(0).cast("bigint").alias("d")).localCheckpoint(
+        eager=True
+    )
     frontier = dist.select(*keys)
     for k in range(1, max_hops + 1):
         nxt = (
@@ -209,13 +217,163 @@ def bfs_levels(
             .distinct()
             .join(dist.select(*keys), keys, "left_anti")
             .withColumn("d", F.lit(k).cast("bigint"))
-            .localCheckpoint()
+            .localCheckpoint(eager=True)
         )
         if nxt.isEmpty():
             break
-        dist = dist.unionByName(nxt).localCheckpoint()
+        dist = dist.unionByName(nxt).localCheckpoint(eager=True)
         frontier = nxt.select(*keys)
     return dist
+
+
+def relax_min(
+    edges: DataFrame,
+    dist: DataFrame,
+    col: str,
+    step: Column,
+    rounds: int,
+    bound: int,
+) -> DataFrame:
+    """`rounds` synchronous min-relaxation rounds of the per-node value
+    `col` of `dist` (node, col) over directed (src, dst, *carry) edges:
+    each node offers `step` (an expression over its `col` and the edge
+    columns) to every dst, and each node keeps the min of what it holds
+    and what it is offered — Bellman-Ford for step = col + w, the
+    minimax bottleneck for step = greatest(col, w).
+
+    Per round: the value vector joins the edge table behind the size
+    guard (`bound` is an upper bound on its row count), one union, one
+    min per node and a checkpoint; the edge table never re-exchanges
+    while the guard holds."""
+    for _ in range(rounds):
+        relaxed = edges.join(
+            broadcast_if_small(dist, bound), dist["node"] == edges["src"]
+        ).select(F.col("dst").alias("node"), step.alias(col))
+        dist = (
+            dist.unionByName(relaxed)
+            .groupBy("node")
+            .agg(F.min(col).alias(col))
+            .localCheckpoint(eager=True)
+        )
+    return dist
+
+
+def brandes_forward(
+    edges: DataFrame, seeds: DataFrame, max_seeds: int, max_hops: int
+) -> tuple[list[DataFrame], int]:
+    """Forward sweep of Brandes' betweenness: BFS levels from every
+    `seeds` row (column `node`, at most `max_seeds` rows) over directed
+    (src, dst) edges, with sigma = the number of shortest paths from
+    the seed. Returns (levels, bound): levels[k] is the (seed, node,
+    sigma) frontier at hop k, for k up to `max_hops` or up to the last
+    non-empty level, whichever comes first; bound is the row bound of
+    every frontier, settled set and delta table.
+
+    Per level: ONE edge join, sigma summed per (seed, dst), and an
+    anti-join against the settled set; each level is a checkpoint. An
+    empty frontier ends the sweep: every deeper level, and every
+    backward delta that joins through it, is empty too.
+
+    Every frontier/settled/delta table is bounded by seeds x |nodes|
+    <= max_seeds x |edges| rows; they are size-guard broadcast so the
+    checkpointed edge table never re-exchanges per level (§3.1; above
+    the bound the hint is dropped and the shuffle join degrades
+    gracefully)."""
+    levels = [
+        seeds.select(
+            F.col("node").alias("seed"),
+            "node",
+            F.lit(1).cast("bigint").alias("sigma"),
+        ).localCheckpoint(eager=True)
+    ]
+    settled = levels[0].select("seed", "node").localCheckpoint(eager=True)
+    bound = max_seeds * edges.count()
+    for _ in range(max_hops):
+        f = levels[-1]
+        nxt = (
+            broadcast_if_small(f, bound)
+            .join(edges, f["node"] == edges["src"])
+            .groupBy("seed", F.col("dst").alias("node"))
+            .agg(F.sum("sigma").alias("sigma"))
+            .join(broadcast_if_small(settled, bound), ["seed", "node"], "left_anti")
+            .localCheckpoint(eager=True)
+        )
+        if nxt.isEmpty():
+            break
+        levels.append(nxt)
+        settled = settled.unionByName(nxt.select("seed", "node")).localCheckpoint(
+            eager=True
+        )
+    return levels, bound
+
+
+def brandes_backward(
+    edges: DataFrame, levels: list[DataFrame], bound: int
+) -> tuple[dict[int, DataFrame], list[DataFrame]]:
+    """Backward sweep of Brandes' betweenness over the `levels` and
+    `bound` of `brandes_forward`. Returns (deltas, credits):
+
+    - deltas[k], k >= 1: (seed, node, delta) with delta(v) =
+      round(sum_w sigma_v/sigma_w * (1 + delta_w), 12) over the tree
+      edges v -> w into level k+1 — one checkpoint per level, deepest
+      first (the per-level round(12) keeps both engines on one
+      trajectory);
+    - credits[k], k >= 0 (level 0 = the seeds' own edges): (eu, ev, c),
+      the per-edge term c(v -> w) = round(sigma_v/sigma_w * (1 +
+      delta_w), 12) of every tree edge into level k+1, the edge
+      canonical as (min, max). Lazy: they run only if read.
+
+    Per level, ONE dependency join f[k] ⋈ edges ⋈ f[k+1] ⟕ deltas[k+1]
+    feeds both, every side but the edge table size-guard broadcast."""
+    deltas: dict[int, DataFrame] = {}
+    credits: list[DataFrame] = []
+    for k in range(len(levels) - 2, -1, -1):
+        f = levels[k]
+        w = levels[k + 1].select(
+            F.col("seed").alias("w_seed"),
+            F.col("node").alias("w_node"),
+            F.col("sigma").alias("w_sigma"),
+        )
+        j = (
+            broadcast_if_small(f, bound)
+            .join(edges, f["node"] == edges["src"])
+            .join(
+                broadcast_if_small(w, bound),
+                (F.col("w_seed") == F.col("seed"))
+                & (F.col("w_node") == F.col("dst")),
+            )
+        )
+        if k + 1 in deltas:
+            bd = deltas[k + 1].select(
+                F.col("seed").alias("b_seed"),
+                F.col("node").alias("b_node"),
+                F.col("delta").alias("b_delta"),
+            )
+            j = j.join(
+                broadcast_if_small(bd, bound),
+                (F.col("b_seed") == F.col("seed"))
+                & (F.col("b_node") == F.col("w_node")),
+                "left",
+            )
+            dterm = F.coalesce(F.col("b_delta"), F.lit(0.0))
+        else:
+            dterm = F.lit(0.0)
+        t = F.col("sigma").cast("double") / F.col("w_sigma") * (1.0 + dterm)
+        credits.insert(
+            0,
+            j.select(
+                F.least(f["node"], F.col("w_node")).alias("eu"),
+                F.greatest(f["node"], F.col("w_node")).alias("ev"),
+                F.round(t, 12).alias("c"),
+            ),
+        )
+        if k >= 1:
+            deltas[k] = (
+                j.groupBy("seed", "node")
+                .agg(F.round(F.sum(t), 12).alias("delta"))
+                .localCheckpoint(eager=True)
+            )
+    return deltas, credits
 
 
 def vertex_degrees(edges: DataFrame) -> DataFrame:

@@ -15,16 +15,21 @@ expressions in the vector tier.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from functools import reduce
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.graphs import (
     EDGE_THIN_BELOW,
     aggregate_messages,
     bfs_levels,
+    brandes_backward,
+    brandes_forward,
     co_occurrence_pairs,
     directed_edges,
     md5_thin,
+    relax_min,
 )
 from ..operators.spread import broadcast_if_small
 from ._util import t, registry
@@ -234,8 +239,6 @@ def q_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
             .localCheckpoint(eager=True)
         )
         snaps.append(_snap(k, labels))
-    from functools import reduce
-
     return reduce(lambda a, b: a.unionByName(b), snaps)
 
 
@@ -345,34 +348,29 @@ def _weighted_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     return directed_edges(eu.withColumn("w", w), "w")
 
 
-@_q("sssp_weighted", _sql_sssp())
-def q_sssp_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _relax_from_seeds(
+    spark: SparkSession, sf_dir: str, col: str, step: Column
+) -> DataFrame:
+    """`_SSSP_ROUNDS` rounds of `relax_min` over the weighted graph,
+    from value 0 at the suppkey % 20 == 0 seeds."""
     edges = _weighted_edges(spark, sf_dir)
     # |dist| <= |nodes| <= |directed edges| (every node appears as a
     # src in the symmetrized table); one no-shuffle count on the
     # checkpointed RDD bounds every round's broadcast guard
     n_edges = edges.count()
-    dist = (
+    seeds = (
         edges.select(F.col("src").alias("node"))
         .where(F.col("node") % 20 == 0)
         .distinct()
-        .withColumn("dist", F.lit(0).cast("bigint"))
-        .localCheckpoint()
+        .withColumn(col, F.lit(0).cast("bigint"))
+        .localCheckpoint(eager=True)
     )
-    for _ in range(_SSSP_ROUNDS):
-        # broadcast the tentative-distance vector — node metadata (see
-        # aggregate_messages), size-guarded; the weighted edge table never
-        # re-exchanges while the guard holds
-        relaxed = (
-            edges.join(broadcast_if_small(dist, n_edges), dist.node == edges.src)
-            .select(F.col("dst").alias("node"), (F.col("dist") + F.col("w")).alias("dist"))
-        )
-        dist = (
-            dist.unionByName(relaxed)
-            .groupBy("node")
-            .agg(F.min("dist").alias("dist"))
-            .localCheckpoint()
-        )
+    return relax_min(edges, seeds, col, step, _SSSP_ROUNDS, n_edges)
+
+
+@_q("sssp_weighted", _sql_sssp())
+def q_sssp_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
+    dist = _relax_from_seeds(spark, sf_dir, "dist", F.col("dist") + F.col("w"))
     return dist.select(F.col("node").alias("s_suppkey"), "dist")
 
 
@@ -853,6 +851,10 @@ def q_hub_removal_resilience(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint(eager=True)
     )
 
+    # every label vector is bounded by its node count <= |edges|
+    # (edges_cut is a subset of edges): one no-shuffle count on the
+    # checkpointed table bounds both variants' broadcast guard
+    n_edges = edges.count()
     out = None
     for tag, e in (("full", edges), ("cut", edges_cut)):
         nodes = e.select(F.col("src").alias("node")).distinct().localCheckpoint(
@@ -860,10 +862,8 @@ def q_hub_removal_resilience(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         labels = nodes.withColumn("label", F.col("node"))
         for _ in range(_RES_ROUNDS):
-            nbr_min = (
-                labels.join(e, labels.node == e.src)
-                .groupBy(F.col("dst").alias("node"))
-                .agg(F.min("label").alias("nbr_min"))
+            nbr_min = aggregate_messages(
+                e, labels, n_edges, F.min("label").alias("nbr_min")
             )
             labels = (
                 labels.join(nbr_min, "node", "left")
@@ -1148,8 +1148,6 @@ def q_community_label_propagation(
             .localCheckpoint(eager=True)
         )
         snaps.append(_snap(k, labels))
-    from functools import reduce
-
     return reduce(lambda a, b: a.unionByName(b), snaps).orderBy("round")
 
 
@@ -1170,7 +1168,8 @@ def q_community_label_propagation(
 # by level with a per-level round(12) (the pagerank re-sync seam —
 # the only floats in the whole query); per-node betweenness then
 # sums the per-seed deltas as exact picounits (round(delta*1e12)
-# BIGINT), so the cross-seed accumulation is order-free. Plan: each
+# BIGINT), so the cross-seed accumulation is order-free. Plan (the
+# operators/graphs.py sweeps brandes_forward/brandes_backward): each
 # forward level is ONE join + one groupBy + one anti-join (frontier
 # rows only); each backward level ONE three-way join on the
 # (level, level+1) frontier slices — everything bounded by
@@ -1253,102 +1252,12 @@ def q_betweenness_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = directed_edges(_undirected_edges(spark, sf_dir))
     nodes = edges.select(F.col("src").alias("node")).distinct()
     seeds = nodes.orderBy("node").limit(_BC_SEEDS)
-    f = {
-        0: seeds.select(
-            F.col("node").alias("seed"),
-            "node",
-            F.lit(1).cast("bigint").alias("sigma"),
-        ).localCheckpoint(eager=True)
-    }
-    settled = f[0].select("seed", "node").localCheckpoint(eager=True)
-    # every frontier/settled/delta table is bounded by seeds x |nodes|
-    # <= _BC_SEEDS x n_edges rows: size-guard-broadcast them so the
-    # checkpointed edge table never re-exchanges per level (§3.1; the
-    # r16 pass skipped this for want of a guard — above the bound the
-    # hint is dropped and the shuffle join degrades gracefully)
-    fr_bound = _BC_SEEDS * edges.count()
-    for k in range(1, _BC_MAX_HOPS + 1):
-        if f[k - 1] is None:
-            f[k] = None
-            continue
-        nxt = (
-            broadcast_if_small(f[k - 1], fr_bound)
-            .join(edges, f[k - 1]["node"] == edges["src"])
-            .groupBy("seed", F.col("dst").alias("node"))
-            .agg(F.sum("sigma").alias("sigma"))
-            .join(
-                broadcast_if_small(settled, fr_bound),
-                ["seed", "node"],
-                "left_anti",
-            )
-            .localCheckpoint(eager=True)
-        )
-        # BFS drain: once a frontier comes back empty, every deeper
-        # level — and every backward delta that joins through it — is
-        # provably empty (the radius cap exceeds the seeds' measured
-        # eccentricity on every fixture SF), so the dead levels' join/
-        # checkpoint machinery is skipped; unioning nothing is
-        # identical to unioning empty frames.
-        if nxt.isEmpty():
-            f[k] = None
-            continue
-        f[k] = nxt
-        settled = settled.unionByName(
-            nxt.select("seed", "node")
-        ).localCheckpoint(eager=True)
-    b: dict[int, DataFrame] = {}
-    for k in range(_BC_MAX_HOPS - 1, 0, -1):
-        if f[k] is None or f[k + 1] is None:
-            continue  # empty frontier slice: b[k] would be empty
-        w = f[k + 1].select(
-            F.col("seed").alias("w_seed"),
-            F.col("node").alias("w_node"),
-            F.col("sigma").alias("w_sigma"),
-        )
-        j = (
-            broadcast_if_small(f[k], fr_bound)
-            .join(edges, f[k]["node"] == edges["src"])
-            .join(
-                broadcast_if_small(w, fr_bound),
-                (F.col("w_seed") == F.col("seed"))
-                & (F.col("w_node") == F.col("dst")),
-            )
-        )
-        if k + 1 in b:
-            bd = b[k + 1].select(
-                F.col("seed").alias("b_seed"),
-                F.col("node").alias("b_node"),
-                F.col("delta").alias("b_delta"),
-            )
-            j = j.join(
-                broadcast_if_small(bd, fr_bound),
-                (F.col("b_seed") == F.col("seed"))
-                & (F.col("b_node") == F.col("w_node")),
-                "left",
-            )
-            dterm = F.coalesce(F.col("b_delta"), F.lit(0.0))
-        else:
-            dterm = F.lit(0.0)
-        b[k] = (
-            j.groupBy("seed", "node")
-            .agg(
-                F.round(
-                    F.sum(
-                        F.col("sigma").cast("double")
-                        / F.col("w_sigma")
-                        * (1.0 + dterm)
-                    ),
-                    12,
-                ).alias("delta")
-            )
-            .localCheckpoint(eager=True)
-        )
-    from functools import reduce
-
-    parts = [b[k] for k in range(1, _BC_MAX_HOPS) if k in b]
+    levels, bound = brandes_forward(edges, seeds, _BC_SEEDS, _BC_MAX_HOPS)
+    deltas, _ = brandes_backward(edges, levels, bound)
+    parts = [deltas[k] for k in sorted(deltas)]
     if not parts:  # all delta levels empty: keep the (empty) shape
         parts = [
-            f[0].select(
+            levels[0].select(
                 "seed", "node", F.lit(0.0).alias("delta")
             ).limit(0)
         ]
@@ -1576,8 +1485,6 @@ def q_ktruss_peeling(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         cur = keepers.select("u", "v")
-    from functools import reduce
-
     return reduce(lambda a, b: a.unionByName(b), snaps).orderBy("round")
 
 
@@ -1829,8 +1736,6 @@ def q_temporal_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             )
         )
-    from functools import reduce
-
     return (
         reduce(lambda x, y: x.unionByName(y), snaps)
         .select(
@@ -2161,8 +2066,6 @@ def q_percolation_robustness(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("giant_size").cast("bigint"),
             )
         )
-    from functools import reduce
-
     return reduce(lambda a, b: a.unionByName(b), rows).orderBy(
         "retention_pct"
     )
@@ -2339,142 +2242,11 @@ def q_edge_betweenness_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = directed_edges(_undirected_edges(spark, sf_dir))
     nodes = edges.select(F.col("src").alias("node")).distinct()
     seeds = nodes.orderBy("node").limit(_BC_SEEDS)
-    f = {
-        0: seeds.select(
-            F.col("node").alias("seed"),
-            "node",
-            F.lit(1).cast("bigint").alias("sigma"),
-        ).localCheckpoint(eager=True)
-    }
-    settled = f[0].select("seed", "node").localCheckpoint(eager=True)
-    # every frontier/settled/delta table is bounded by seeds x |nodes|
-    # <= _BC_SEEDS x n_edges rows: size-guard-broadcast them so the
-    # checkpointed edge table never re-exchanges per level (§3.1; the
-    # r16 pass skipped this for want of a guard — above the bound the
-    # hint is dropped and the shuffle join degrades gracefully)
-    fr_bound = _BC_SEEDS * edges.count()
-    for k in range(1, _BC_MAX_HOPS + 1):
-        if f[k - 1] is None:
-            f[k] = None
-            continue
-        nxt = (
-            broadcast_if_small(f[k - 1], fr_bound)
-            .join(edges, f[k - 1]["node"] == edges["src"])
-            .groupBy("seed", F.col("dst").alias("node"))
-            .agg(F.sum("sigma").alias("sigma"))
-            .join(
-                broadcast_if_small(settled, fr_bound),
-                ["seed", "node"],
-                "left_anti",
-            )
-            .localCheckpoint(eager=True)
-        )
-        # same BFS-drain early-out as betweenness_sampled: an empty
-        # frontier makes all deeper levels and their credits empty
-        if nxt.isEmpty():
-            f[k] = None
-            continue
-        f[k] = nxt
-        settled = settled.unionByName(
-            nxt.select("seed", "node")
-        ).localCheckpoint(eager=True)
-    b: dict[int, DataFrame] = {}
-    for k in range(_BC_MAX_HOPS - 1, 0, -1):
-        if f[k] is None or f[k + 1] is None:
-            continue  # empty frontier slice: b[k] would be empty
-        w = f[k + 1].select(
-            F.col("seed").alias("w_seed"),
-            F.col("node").alias("w_node"),
-            F.col("sigma").alias("w_sigma"),
-        )
-        j = (
-            broadcast_if_small(f[k], fr_bound)
-            .join(edges, f[k]["node"] == edges["src"])
-            .join(
-                broadcast_if_small(w, fr_bound),
-                (F.col("w_seed") == F.col("seed"))
-                & (F.col("w_node") == F.col("dst")),
-            )
-        )
-        if k + 1 in b:
-            bd = b[k + 1].select(
-                F.col("seed").alias("b_seed"),
-                F.col("node").alias("b_node"),
-                F.col("delta").alias("b_delta"),
-            )
-            j = j.join(
-                broadcast_if_small(bd, fr_bound),
-                (F.col("b_seed") == F.col("seed"))
-                & (F.col("b_node") == F.col("w_node")),
-                "left",
-            )
-            dterm = F.coalesce(F.col("b_delta"), F.lit(0.0))
-        else:
-            dterm = F.lit(0.0)
-        b[k] = (
-            j.groupBy("seed", f[k]["node"].alias("node"))
-            .agg(
-                F.round(
-                    F.sum(
-                        F.col("sigma").cast("double")
-                        / F.col("w_sigma")
-                        * (1.0 + dterm)
-                    ),
-                    12,
-                ).alias("delta")
-            )
-            .localCheckpoint(eager=True)
-        )
-    creds = []
-    for k in range(0, _BC_MAX_HOPS):
-        if f[k] is None or f[k + 1] is None:
-            continue  # empty frontier slice: no path credits here
-        w = f[k + 1].select(
-            F.col("seed").alias("w_seed"),
-            F.col("node").alias("w_node"),
-            F.col("sigma").alias("w_sigma"),
-        )
-        j = (
-            broadcast_if_small(f[k], fr_bound)
-            .join(edges, f[k]["node"] == edges["src"])
-            .join(
-                broadcast_if_small(w, fr_bound),
-                (F.col("w_seed") == F.col("seed"))
-                & (F.col("w_node") == F.col("dst")),
-            )
-        )
-        if k + 1 in b:
-            bd = b[k + 1].select(
-                F.col("seed").alias("b_seed"),
-                F.col("node").alias("b_node"),
-                F.col("delta").alias("b_delta"),
-            )
-            j = j.join(
-                broadcast_if_small(bd, fr_bound),
-                (F.col("b_seed") == F.col("seed"))
-                & (F.col("b_node") == F.col("w_node")),
-                "left",
-            )
-            dterm = F.coalesce(F.col("b_delta"), F.lit(0.0))
-        else:
-            dterm = F.lit(0.0)
-        creds.append(
-            j.select(
-                F.least(f[k]["node"], F.col("w_node")).alias("eu"),
-                F.greatest(f[k]["node"], F.col("w_node")).alias("ev"),
-                F.round(
-                    F.col("sigma").cast("double")
-                    / F.col("w_sigma")
-                    * (1.0 + dterm),
-                    12,
-                ).alias("c"),
-            )
-        )
-    from functools import reduce
-
+    levels, bound = brandes_forward(edges, seeds, _BC_SEEDS, _BC_MAX_HOPS)
+    _, creds = brandes_backward(edges, levels, bound)
     if not creds:  # all credit levels empty: keep the (empty) shape
         creds = [
-            f[0].select(
+            levels[0].select(
                 F.col("node").alias("eu"),
                 F.col("node").alias("ev"),
                 F.lit(0.0).alias("c"),
@@ -2837,25 +2609,9 @@ def _sql_minimax() -> str:
 
 @_q("minimax_path_bottleneck", _sql_minimax())
 def q_minimax_path_bottleneck(spark: SparkSession, sf_dir: str) -> DataFrame:
-    edges = _weighted_edges(spark, sf_dir)
-    dist = (
-        edges.select(F.col("src").alias("node"))
-        .where(F.col("node") % 20 == 0)
-        .distinct()
-        .withColumn("bneck", F.lit(0).cast("bigint"))
-        .localCheckpoint()
+    dist = _relax_from_seeds(
+        spark, sf_dir, "bneck", F.greatest(F.col("bneck"), F.col("w"))
     )
-    for _ in range(_SSSP_ROUNDS):
-        relaxed = dist.join(edges, dist.node == edges.src).select(
-            F.col("dst").alias("node"),
-            F.greatest(F.col("bneck"), F.col("w")).alias("bneck"),
-        )
-        dist = (
-            dist.unionByName(relaxed)
-            .groupBy("node")
-            .agg(F.min("bneck").alias("bneck"))
-            .localCheckpoint()
-        )
     return dist.select(F.col("node").alias("s_suppkey"), F.col("bneck").alias("bottleneck"))
 
 
@@ -2866,11 +2622,11 @@ def q_minimax_path_bottleneck(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (BFS layers differ by at most 1 across an edge, so same parity =
 # same layer). Census: edges whose endpoints are both reached, split
 # into cross-layer vs conflict (same-parity) witnesses. The layering
-# is the bfs_hop_distance fixed-round envelope (cap 6 — past the
-# fixture graph's eccentricity; both engines compute the identical
-# capped layering either way). 100 TB: layering is one join/round;
-# the census is one broadcast-free equi-join of the edge list against
-# the (node, hop) table — linear in edges.
+# is bfs_hop_distance's: bfs_levels from the same seeds, cap 6 — past
+# the fixture graph's eccentricity; both engines compute the identical
+# capped min-hop layering either way. 100 TB: layering is one frontier
+# join per level; the census is one broadcast-free equi-join of the
+# edge list against the (node, hop) table — linear in edges.
 def _sql_bipartite() -> str:
     return f"""
     WITH RECURSIVE {_SQL_EDGES.strip()},
@@ -2903,25 +2659,10 @@ def _sql_bipartite() -> str:
 def q_graph_bipartite_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     eu = _undirected_edges(spark, sf_dir).localCheckpoint(eager=True)
     edges = directed_edges(eu)
-    dist = (
-        edges.select(F.col("src").alias("node"))
-        .where(F.col("node") % 10 == 0)
-        .distinct()
-        .withColumn("hop", F.lit(0).cast("bigint"))
-        .localCheckpoint()
-    )
-    for _ in range(_BFS_MAX_HOPS):
-        relaxed = dist.join(edges, dist.node == edges.src).select(
-            F.col("dst").alias("node"), (F.col("hop") + 1).alias("hop")
-        )
-        dist = (
-            dist.unionByName(relaxed)
-            .groupBy("node")
-            .agg(F.min("hop").alias("hop"))
-            .localCheckpoint()
-        )
-    la = dist.select(F.col("node").alias("u"), F.col("hop").alias("ha"))
-    lb = dist.select(F.col("node").alias("v"), F.col("hop").alias("hb"))
+    nodes = edges.select(F.col("src").alias("node")).distinct()
+    dist = bfs_levels(edges, nodes.where(F.col("node") % 10 == 0), _BFS_MAX_HOPS)
+    la = dist.select(F.col("node").alias("u"), F.col("d").alias("ha"))
+    lb = dist.select(F.col("node").alias("v"), F.col("d").alias("hb"))
     census = (
         eu.join(la, "u")
         .join(lb, "v")

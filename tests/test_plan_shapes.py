@@ -305,8 +305,17 @@ def test_sparse_cosine_no_cartesian(spark):
     assert "TakeOrderedAndProject" in p
 
 
-def test_betweenness_equi_joins_only(spark):
-    p = plan_of(spark, "betweenness_sampled")
+@pytest.mark.parametrize(
+    "name",
+    [
+        "betweenness_sampled",
+        "edge_betweenness_topk",
+        "sssp_weighted",
+        "minimax_path_bottleneck",
+    ],
+)
+def test_betweenness_equi_joins_only(spark, name):
+    p = plan_of(spark, name)
     assert "CartesianProduct" not in p
     assert "BroadcastNestedLoopJoin" not in p
 
@@ -625,6 +634,31 @@ def test_no_inline_edge_symmetrization_in_plans():
     from tb_scale_spatial_data_pipeline_spark import plans
 
     copy = 'F.col("v").alias("src"), F.col("u").alias("dst")'
+    hits = [
+        p.name
+        for p in pathlib.Path(plans.__file__).parent.glob("*.py")
+        if copy in p.read_text()
+    ]
+    assert hits == []
+
+
+@pytest.mark.parametrize(
+    "copy",
+    [
+        "w_sigma",  # the Brandes dependency join
+        ".unionByName(relaxed)",  # an inline union-plus-min relaxation
+    ],
+    ids=["brandes_dependency_join", "min_relaxation_round"],
+)
+def test_no_inline_graph_round_in_plans(copy):
+    """The Brandes sweeps and the min-relaxation round live once, in
+    operators/graphs.py (brandes_forward/brandes_backward, relax_min);
+    a copy under plans/ would carry its own guard and checkpoint
+    policy again."""
+    import pathlib
+
+    from tb_scale_spatial_data_pipeline_spark import plans
+
     hits = [
         p.name
         for p in pathlib.Path(plans.__file__).parent.glob("*.py")
