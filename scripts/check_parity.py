@@ -162,7 +162,11 @@ def main() -> int:
         else:
             print(f"PASS {name} ({time.time()-t0:.1f}s, {len(spark_pdf)} rows)")
             n_pass += 1
-    print(f"\n{n_pass} pass, {n_fail} fail, {n_rows_only} rows-only")
+    print(
+        f"\n{n_pass} pass, {n_fail} fail, {n_rows_only} rows-only"
+        f" (shuffle.partitions={spark.conf.get('spark.sql.shuffle.partitions')},"
+        f" defaultParallelism={spark.sparkContext.defaultParallelism})"
+    )
     return 1 if n_fail else 0
 
 

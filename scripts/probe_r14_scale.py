@@ -52,7 +52,7 @@ def timed(fn, spark, sf_dir, n=2) -> float:
 
 
 def main() -> None:
-    spark = get_spark("probe_r14", cpus=32, shuffle_partitions=32)
+    spark = get_spark("probe_r14", cpus=32)
     build_x10(spark)
     from tb_scale_spatial_data_pipeline_spark.plans.corpus_queries import (
         q_duplicate_span_fraction,

@@ -62,7 +62,13 @@ def train_rf(
         rf.setFeatureSubsetStrategy(feature_subset_strategy)
     if bootstrap is not None:
         rf.setBootstrap(bootstrap)
-    return Pipeline(stages=[assembler, rf]).fit(df)
+    # copy(): the same trees and params without the training summary.
+    # The summary holds the SparkSession, and once the session has run
+    # an `Observation` (operators/graphs.py::counted_checkpoint counts
+    # every BFS level with one) it no longer serializes on Spark 4.1.2
+    # (`ObservationManager`), so every task that ships the model would
+    # fail with "Task not serializable".
+    return Pipeline(stages=[assembler, rf]).fit(df).copy()
 
 
 def predict(model: PipelineModel, df: DataFrame, out_col: str = "pred") -> DataFrame:

@@ -41,7 +41,9 @@ they take is an eager `localCheckpoint(eager=True)`:
   the held values, keep the min per node) behind the same guard;
 - `bfs_levels` is the level-synchronous frontier loop: one edge join,
   a distinct and an anti-join against the settled set per level, a
-  checkpoint per level and an early exit on an empty frontier;
+  checkpoint per level that also counts the frontier
+  (`counted_checkpoint`, one job) and an early exit on an empty
+  frontier;
 - `brandes_forward` / `brandes_backward` are the two sweeps of
   Brandes' betweenness from a seed set: shortest-path counts sigma per
   BFS level, then the dependency join that yields both the per-node
@@ -52,7 +54,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from .spread import broadcast_if_small, full_width
@@ -188,6 +190,15 @@ def aggregate_messages(
     )
 
 
+def counted_checkpoint(df: DataFrame) -> tuple[DataFrame, int]:
+    """Eager checkpoint of `df` and its row count, observed by the
+    checkpoint job itself: one job where a checkpoint followed by an
+    `isEmpty()`/`count()` probe runs two."""
+    obs = Observation()
+    df = df.observe(obs, F.count(F.lit(1)).alias("rows")).localCheckpoint(eager=True)
+    return df, obs.get["rows"]
+
+
 def bfs_levels(
     edges: DataFrame,
     start: DataFrame,
@@ -202,8 +213,9 @@ def bfs_levels(
 
     Per level: ONE edge join, a distinct, and an anti-join against the
     settled set — rows in flight are only the frontier. Each level is
-    an eager checkpoint, the emptiness probe reads the materialized
-    frontier, and the loop stops at the first empty frontier."""
+    an eager checkpoint that also counts the frontier
+    (`counted_checkpoint`), and the loop stops at the first empty
+    frontier."""
     keys = list(keys)
     carried = [k for k in keys if k != "node"]
     dist = start.select(*keys, F.lit(0).cast("bigint").alias("d")).localCheckpoint(
@@ -211,15 +223,14 @@ def bfs_levels(
     )
     frontier = dist.select(*keys)
     for k in range(1, max_hops + 1):
-        nxt = (
+        nxt, rows = counted_checkpoint(
             frontier.join(edges, frontier["node"] == edges["src"])
             .select(*carried, F.col("dst").alias("node"))
             .distinct()
             .join(dist.select(*keys), keys, "left_anti")
             .withColumn("d", F.lit(k).cast("bigint"))
-            .localCheckpoint(eager=True)
         )
-        if nxt.isEmpty():
+        if rows == 0:
             break
         dist = dist.unionByName(nxt).localCheckpoint(eager=True)
         frontier = nxt.select(*keys)
@@ -270,9 +281,10 @@ def brandes_forward(
     every frontier, settled set and delta table.
 
     Per level: ONE edge join, sigma summed per (seed, dst), and an
-    anti-join against the settled set; each level is a checkpoint. An
-    empty frontier ends the sweep: every deeper level, and every
-    backward delta that joins through it, is empty too.
+    anti-join against the settled set; each level is a checkpoint that
+    also counts the frontier (`counted_checkpoint`). An empty frontier
+    ends the sweep: every deeper level, and every backward delta that
+    joins through it, is empty too.
 
     Every frontier/settled/delta table is bounded by seeds x |nodes|
     <= max_seeds x |edges| rows; they are size-guard broadcast so the
@@ -290,15 +302,14 @@ def brandes_forward(
     bound = max_seeds * edges.count()
     for _ in range(max_hops):
         f = levels[-1]
-        nxt = (
+        nxt, rows = counted_checkpoint(
             broadcast_if_small(f, bound)
             .join(edges, f["node"] == edges["src"])
             .groupBy("seed", F.col("dst").alias("node"))
             .agg(F.sum("sigma").alias("sigma"))
             .join(broadcast_if_small(settled, bound), ["seed", "node"], "left_anti")
-            .localCheckpoint(eager=True)
         )
-        if nxt.isEmpty():
+        if rows == 0:
             break
         levels.append(nxt)
         settled = settled.unionByName(nxt.select("seed", "node")).localCheckpoint(

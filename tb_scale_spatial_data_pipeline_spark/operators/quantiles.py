@@ -75,7 +75,7 @@ def _derived_num_ranges(
     job). Unknown-size inputs (stats sentinel, API drift) fall back to
     shuffle.partitions — the pre-round-8 behavior."""
     spark = keyproj.sparkSession
-    floor = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    floor = int(spark.conf.get("spark.sql.shuffle.partitions"))
     try:
         sentinel = int(
             spark.conf.get("spark.sql.defaultSizeInBytes", str((1 << 63) - 1))
@@ -246,7 +246,7 @@ def with_global_cumsum(
     asc = list(ascending) if ascending is not None else [True] * len(cols)
     spark = df.sparkSession
     if num_ranges is None:
-        num_ranges = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+        num_ranges = int(spark.conf.get("spark.sql.shuffle.partitions"))
     exprs = [F.col(c).asc() if a else F.col(c).desc() for c, a in zip(cols, asc)]
     from pyspark.sql import Window
 

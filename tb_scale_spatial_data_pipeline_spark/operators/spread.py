@@ -83,9 +83,11 @@ def broadcast_if_small(df: DataFrame, n_rows: int) -> DataFrame:
 def full_width(spark) -> int:
     """Partition count for an EXPLICIT repartition of a compute-dense
     shuffle: the session's shuffle-partition setting, floored at the
-    core count. Locally both are the core count; on a cluster profile
-    shuffle.partitions is the tuned (large) value, so a fixed-width
-    exchange derived from this never drops below either knob. Use where
+    core count. Locally both are the task-slot count (``get_spark``
+    sets the width to ``cpus``), so this is ``defaultParallelism``: one
+    task per slot. On a cluster profile shuffle.partitions is the tuned
+    (large) value, so a fixed-width exchange derived from this never
+    drops below either knob. Use where
     AQE's byte-based advisory sizing is the wrong objective — a small-
     byte exchange carrying superlinear compute (pair fan-out joins,
     wedge enumeration) that coalescing would serialize (guide §2.5)."""

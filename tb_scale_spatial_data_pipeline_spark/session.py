@@ -5,8 +5,11 @@ make sense on a 1000-executor cluster reading 100 TB:
 
 - AQE on (runtime re-plan, skew-join splitting, partition coalescing)
 - Arrow on (pandas-UDF kernels are Arrow-batched, never row-at-a-time)
-- shuffle partitions sized for the local core count; on a real cluster
-  AQE's coalescing makes the initial number far less sensitive
+- shuffle partitions equal to the task-slot count (``cpus``): one
+  shuffle wave, so every map task writes one block per slot and an
+  explicit ``repartition(full_width(...))`` runs one task per slot;
+  on a real cluster AQE's coalescing makes the initial number far
+  less sensitive, and ``extra_conf`` sets a cluster profile's width
 - broadcast threshold left at default 10 MB — small dims (region,
   nation, model/prediction lookups) broadcast automatically; we still
   add explicit ``broadcast()`` hints where the optimizer can't know
@@ -23,19 +26,26 @@ from pyspark.sql import SparkSession
 def get_spark(
     app_name: str = "tb-scale-pipeline-spark",
     cpus: int | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build (or fetch) a SparkSession with the engine's standard config."""
+    """Build (or fetch) a SparkSession with the engine's standard config
+    on ``local[cpus]``; ``extra_conf`` overrides any setting, the shuffle
+    width included."""
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or (os.cpu_count() or 4)
-    if shuffle_partitions is None:
-        shuffle_partitions = max(cpus, 32)
 
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        # Shuffle width = task slots. At fixture size a query's cost is
+        # fixed cost per job and per task, not work on data, so a width
+        # above the slot count only adds tasks and shuffle blocks. The
+        # old floor of 32 ran weisfeiler_leman_colors (sf0.01, local[2],
+        # median of 10 warm calls) at 3.2-3.6 s of CPU against
+        # 2.05-2.47 s at 2, with the same 29 jobs: its pair-build stage
+        # fell from 32 tasks and 1.36 s of executor CPU to 2 tasks and
+        # 0.50 s.
+        .config("spark.sql.shuffle.partitions", str(cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         # AQE coalescing floor: Spark's default 1m. A global 128k floor

@@ -47,17 +47,23 @@ def run_stream_to_table(
     Stateful operators open one state store PER shuffle partition per
     micro-batch; on the bounded test fixtures that store overhead (not
     the data) dominates, so the shuffle-partition count is scoped down
-    for the run. In production the same knob is sized UP to spread
+    for the run: to ``shuffle_partitions``, and never above the
+    session's task slots (``defaultParallelism``), since a store per
+    partition beyond one per slot only queues another task wave
+    (stream_dedup on local[2]: 1.31 s of CPU with 4 state partitions,
+    1.02 s with 2). In production the same knob is sized UP to spread
     state across executors — it is per-query-start, not a code change,
     because the state layout is fixed at first checkpoint. Queries
     whose wall time is per-KEY Python dispatch rather than store
     overhead (measured: stream_ttl_dedup, 7.5k keys) pass a larger
-    count — at sf0.1 the 4→16 step cut its wall 13.4 s → 10.3 s with
-    a plateau by 32 (PLANS.md r11 decomposition)."""
+    count — at sf0.1 on 32 slots the 4→16 step cut its wall
+    13.4 s → 10.3 s with a plateau by 32 (PLANS.md r11
+    decomposition)."""
     spark = out.sparkSession
     name = f"stream_result_{uuid.uuid4().hex[:12]}"
+    width = min(shuffle_partitions, spark.sparkContext.defaultParallelism)
     prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
+    spark.conf.set("spark.sql.shuffle.partitions", str(width))
     try:
         q = (
             out.writeStream.format("memory")

@@ -15,7 +15,7 @@ SF_SMOKE = "/root/testdata/sf0.001"
 def spark():
     from tb_scale_spatial_data_pipeline_spark.session import get_spark
 
-    s = get_spark("tests", cpus=8, shuffle_partitions=8)
+    s = get_spark("tests", cpus=8)
     yield s
 
 

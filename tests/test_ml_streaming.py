@@ -35,6 +35,25 @@ def test_rf_train_predict_roundtrip(spark, tmp_path):
     assert out2.where(F.col("pred") >= 0).count() == 200
 
 
+def test_rf_predict_after_observation(spark):
+    """A forest trained after the session ran an Observation (every
+    bfs_levels level counts its frontier with one) must still ship to
+    tasks: a training summary on the model holds the session, which no
+    longer serializes once the session has observed a metric."""
+    from tb_scale_spatial_data_pipeline_spark.ml.classify import predict, train_rf
+    from tb_scale_spatial_data_pipeline_spark.operators.graphs import (
+        counted_checkpoint,
+    )
+
+    counted_checkpoint(spark.range(3))
+    df = spark.createDataFrame(
+        [(float(i % 10), float(1 if i % 10 > 4 else 0)) for i in range(100)],
+        "f1 double, label double",
+    )
+    model = train_rf(df, ["f1"], "label", num_trees=2, max_depth=3)
+    assert predict(model, df).where(F.col("pred") >= 0).count() == 100
+
+
 def test_dual_model_fallback_split(spark):
     from tb_scale_spatial_data_pipeline_spark.ml.classify import (
         dual_model_predict,

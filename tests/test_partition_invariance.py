@@ -74,6 +74,11 @@ REPRESENTATIVE = [
     "degree_assortativity",
     "hub_removal_resilience",
     "heaps_law_vocab_growth",
+    # the registry_mix benchmark queries whose default width follows
+    # the slot count (pricing_summary is listed above)
+    "weisfeiler_leman_colors",
+    "q3_shipping_priority",
+    "tfidf_topk",
 ]
 
 

@@ -593,27 +593,24 @@ def _python_bfs(starts, max_hops):
 def test_bfs_levels_matches_reference(spark, monkeypatch, keys, starts, max_hops, levels):
     """bfs_levels must return the min-hop distances of a plain BFS
     within the hop cap, per seed when keyed by (seed, node), and stop
-    probing levels at the first empty frontier."""
+    counting levels at the first empty frontier."""
     from pyspark.sql import functions as F
 
-    from tb_scale_spatial_data_pipeline_spark.operators.graphs import (
-        bfs_levels,
-        directed_edges,
-    )
+    from tb_scale_spatial_data_pipeline_spark.operators import graphs
 
-    edges = directed_edges(_small_eu(spark))
+    edges = graphs.directed_edges(_small_eu(spark))
     start = spark.createDataFrame([(s,) for s in starts], "node long")
     if keys == ("seed", "node"):
         start = start.select(F.col("node").alias("seed"), "node")
     probes = []
-    is_empty = type(edges).isEmpty
+    counted = graphs.counted_checkpoint
 
-    def counting_is_empty(df):
+    def counting_checkpoint(df):
         probes.append(1)
-        return is_empty(df)
+        return counted(df)
 
-    monkeypatch.setattr(type(edges), "isEmpty", counting_is_empty)
-    got = bfs_levels(edges, start, max_hops, keys=keys)
+    monkeypatch.setattr(graphs, "counted_checkpoint", counting_checkpoint)
+    got = graphs.bfs_levels(edges, start, max_hops, keys=keys)
     assert got.columns == [*keys, "d"]
     rows = got.collect()
     if keys == ("node",):
