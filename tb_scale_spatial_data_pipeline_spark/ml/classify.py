@@ -64,10 +64,10 @@ def train_rf(
         rf.setBootstrap(bootstrap)
     # copy(): the same trees and params without the training summary.
     # The summary holds the SparkSession, and once the session has run
-    # an `Observation` (operators/graphs.py::counted_checkpoint counts
-    # every BFS level with one) it no longer serializes on Spark 4.1.2
-    # (`ObservationManager`), so every task that ships the model would
-    # fail with "Task not serializable".
+    # an `Observation` (operators/spread.py::counted_checkpoint counts
+    # every edge table and BFS level with one) it no longer serializes
+    # on Spark 4.1.2 (`ObservationManager`), so every task that ships
+    # the model would fail with "Task not serializable".
     return Pipeline(stages=[assembler, rf]).fit(df).copy()
 
 

@@ -233,7 +233,8 @@ def connected_components(
     *diameter*, and LSH duplicate clusters are near-cliques (diameter
     ≤ ~3), so the loop runs 2–4 times in practice; ``max_iter`` is a
     safety bound, with convergence detected by counting rows whose
-    label changed this iteration (zero changes ⇒ fixed point). The
+    label changed this iteration (zero changes ⇒ fixed point), a count
+    the round's checkpoint job observes (``counted_checkpoint``). The
     count works for ANY orderable node-id type — numeric, string,
     binary — unlike a label-sum check, which is NULL on strings and
     would silently "converge" after one round. Exhausting ``max_iter``
@@ -245,26 +246,25 @@ def connected_components(
     and O(log n) rounds. Callers pick by graph shape — this loop for
     near-cliques, the star contraction for long or unknown chains.
 
-    Fixed cost per call: the per-round broadcast guard is bounded by
-    ``n_bound = 2 * e0.count()``, one extra (no-shuffle) job on the
-    materialized edges. It is paid on every call, also when the graph
-    is above the broadcast bound and both per-round joins run as
-    shuffles anyway.
+    Jobs per call: one checkpoint of the edges, one of the initial
+    labels, and one per round; the edge count that bounds the
+    broadcast guard and each round's changed-label count are observed
+    by those checkpoint jobs, so no call runs a probe job.
     """
-    from .spread import broadcast_if_small
+    from .spread import broadcast_if_small, counted_checkpoint
 
     # materialize the (possibly expensive) edge derivation ONCE before
     # the two-direction union — otherwise the union's two branches each
     # recompute the full upstream plan (e.g. the MinHash pipeline).
-    e0 = edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d")).localCheckpoint(
-        eager=True
+    e0, n_e0 = counted_checkpoint(
+        edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d"))
     )
     sym = e0.union(e0.select(F.col("_d"), F.col("_s")))
-    # |labels| = |nodes| <= 2|e0| at every round: one no-shuffle count
-    # on the materialized RDD bounds the per-round broadcast guard, so
-    # the symmetrized edge table never re-exchanges per round (§3.1);
-    # above the guard both joins degrade to shuffles.
-    n_bound = 2 * e0.count()
+    # |labels| = |nodes| <= 2|e0| at every round: the edge count bounds
+    # the per-round broadcast guard, so the symmetrized edge table
+    # never re-exchanges per round (§3.1); above the guard both joins
+    # degrade to shuffles.
+    n_bound = 2 * n_e0
 
     labels = (
         sym.select(F.col("_s").alias("node")).distinct()
@@ -284,24 +284,17 @@ def connected_components(
             .groupBy(F.col("_d").alias("node2"))
             .agg(F.min("lbl").alias("nmin"))
         )
-        stepped = (
+        stepped, n_changed = counted_checkpoint(
             labels.join(
                 broadcast_if_small(neighbor_min, n_bound),
                 labels["node"] == F.col("node2"),
                 "left",
-            )
-            .select(
+            ).select(
                 "node",
                 F.col("lbl").alias("_old"),
                 F.least(F.col("lbl"), F.coalesce(F.col("nmin"), F.col("lbl"))).alias("lbl"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        n_changed = (
-            stepped.agg(
-                F.sum(F.when(F.col("lbl") != F.col("_old"), 1).otherwise(0)).alias("n")
-            ).collect()[0]["n"]
-            or 0
+            ),
+            where=F.col("lbl") != F.col("_old"),
         )
         labels = stepped.select("node", "lbl")
         if n_changed == 0:
@@ -341,9 +334,12 @@ def connected_components_star(
       minimum of that set — stars flatten onto the true minimum.
     The edge set converges to stars rooted at each component min; the
     root set is the labelling. No driver-side graph state; the only
-    driver value per round is the changed-edge count used for the
-    convergence check (type-agnostic, same discipline as the min-label
-    loop).
+    driver values per round are the two counts of the fixed-point test
+    (type-agnostic, same discipline as the min-label loop). They stay
+    two jobs after the round's checkpoint: one joins the frame with its
+    own source set and the other groups it, so neither is a per-row
+    predicate the checkpoint job could observe the way the min-label
+    loop observes its changed-label count.
 
     When to use which: LSH dedup clusters are near-cliques — min-label
     finishes in 2–4 cheap rounds and wins. Graphs with unknown or long

@@ -29,11 +29,14 @@ thinned to realistic sparsity by one md5 bucket predicate (`md5_thin`).
 
 Graph rounds. These helpers own the policy of the iterative graph tier,
 so a change to it lands once instead of at every loop. Every checkpoint
-they take is an eager `localCheckpoint(eager=True)`:
+they take is an eager `localCheckpoint(eager=True)`, and every row count
+that bounds a broadcast or ends a loop is observed by the checkpoint job
+that materializes the frame (`spread.counted_checkpoint`), never by a
+second job:
 
 - `directed_edges` symmetrizes undirected (u, v, *carry) edges into
   (src, dst, *carry) with `unionByName` and materializes them — every
-  caller reads the table more than once;
+  caller reads the table more than once — and returns the row count;
 - `aggregate_messages` is one neighbour-aggregation round: the
   per-round node vector joins the edge table behind the size-guarded
   broadcast (`broadcast_if_small`) and the messages group by dst;
@@ -47,17 +50,19 @@ they take is an eager `localCheckpoint(eager=True)`:
 - `brandes_forward` / `brandes_backward` are the two sweeps of
   Brandes' betweenness from a seed set: shortest-path counts sigma per
   BFS level, then the dependency join that yields both the per-node
-  deltas and the per-edge credits.
+  deltas and the per-edge credits;
+- `functional_closure` is the pointer-doubling closure of a functional
+  graph; its loop ends on the observed count of the 2^k-jump table.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, Observation
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .spread import broadcast_if_small, full_width
+from .spread import broadcast_if_small, counted_checkpoint, full_width
 
 # Per-group fan-out bound for the within-group pair expansion. The
 # expansion's output is Θ(fanout²) per group key, all landing in ONE
@@ -153,17 +158,18 @@ def co_occurrence_pairs(
     return pairs.distinct()
 
 
-def directed_edges(eu: DataFrame, *carry: str) -> DataFrame:
+def directed_edges(eu: DataFrame, *carry: str) -> tuple[DataFrame, int]:
     """Both directions (src, dst, *carry) of undirected (u, v, *carry)
-    edges, eagerly checkpointed: every caller reads its edge table more
-    than once (each round of a loop, or several branches of one plan),
-    so the edge build runs once instead of per read."""
-    return (
+    edges, eagerly checkpointed, and their row count: every caller
+    reads its edge table more than once (each round of a loop, or
+    several branches of one plan), so the edge build runs once instead
+    of per read. The count, observed by the checkpoint job, bounds
+    every node vector of the graph (each node is a src)."""
+    return counted_checkpoint(
         eu.select(F.col("u").alias("src"), F.col("v").alias("dst"), *carry)
         .unionByName(
             eu.select(F.col("v").alias("src"), F.col("u").alias("dst"), *carry)
         )
-        .localCheckpoint(eager=True)
     )
 
 
@@ -188,15 +194,6 @@ def aggregate_messages(
         .groupBy(F.col("dst").alias("node"), *by)
         .agg(*aggs)
     )
-
-
-def counted_checkpoint(df: DataFrame) -> tuple[DataFrame, int]:
-    """Eager checkpoint of `df` and its row count, observed by the
-    checkpoint job itself: one job where a checkpoint followed by an
-    `isEmpty()`/`count()` probe runs two."""
-    obs = Observation()
-    df = df.observe(obs, F.count(F.lit(1)).alias("rows")).localCheckpoint(eager=True)
-    return df, obs.get["rows"]
 
 
 def bfs_levels(
@@ -270,15 +267,16 @@ def relax_min(
 
 
 def brandes_forward(
-    edges: DataFrame, seeds: DataFrame, max_seeds: int, max_hops: int
+    edges: DataFrame, n_edges: int, seeds: DataFrame, max_seeds: int, max_hops: int
 ) -> tuple[list[DataFrame], int]:
     """Forward sweep of Brandes' betweenness: BFS levels from every
-    `seeds` row (column `node`, at most `max_seeds` rows) over directed
-    (src, dst) edges, with sigma = the number of shortest paths from
-    the seed. Returns (levels, bound): levels[k] is the (seed, node,
-    sigma) frontier at hop k, for k up to `max_hops` or up to the last
-    non-empty level, whichever comes first; bound is the row bound of
-    every frontier, settled set and delta table.
+    `seeds` row (column `node`, at most `max_seeds` rows) over the
+    `n_edges` directed (src, dst) edges of `directed_edges`, with sigma
+    = the number of shortest paths from the seed. Returns (levels,
+    bound): levels[k] is the (seed, node, sigma) frontier at hop k, for
+    k up to `max_hops` or up to the last non-empty level, whichever
+    comes first; bound is the row bound of every frontier, settled set
+    and delta table.
 
     Per level: ONE edge join, sigma summed per (seed, dst), and an
     anti-join against the settled set; each level is a checkpoint that
@@ -287,7 +285,7 @@ def brandes_forward(
     joins through it, is empty too.
 
     Every frontier/settled/delta table is bounded by seeds x |nodes|
-    <= max_seeds x |edges| rows; they are size-guard broadcast so the
+    <= max_seeds x n_edges rows; they are size-guard broadcast so the
     checkpointed edge table never re-exchanges per level (§3.1; above
     the bound the hint is dropped and the shuffle join degrades
     gracefully)."""
@@ -299,7 +297,7 @@ def brandes_forward(
         ).localCheckpoint(eager=True)
     ]
     settled = levels[0].select("seed", "node").localCheckpoint(eager=True)
-    bound = max_seeds * edges.count()
+    bound = max_seeds * n_edges
     for _ in range(max_hops):
         f = levels[-1]
         nxt, rows = counted_checkpoint(
@@ -495,7 +493,9 @@ def functional_closure(
     rounds where per-hop propagation (the recursive-CTE shape) takes
     53. Each round is two equi-joins + a union, lineage truncated by
     localCheckpoint; convergence = ``far`` empty (every 2^k-jump ran
-    off the end of its path), checked with one driver-side count.
+    off the end of its path), read from the row count its checkpoint
+    job observes (`counted_checkpoint`) — no probe job per round. An
+    empty edge set returns empty after 0 rounds.
 
     Unique-decomposition invariant: out-degree ≤ 1 means every
     (ancestor, descendant) pair has exactly ONE distance, and the
@@ -514,16 +514,12 @@ def functional_closure(
     a functional graph that deep almost certainly has a cycle, and a
     silent partial closure would corrupt downstream counts.
     """
-    close = edges.select(
-        F.col(src).alias("src"), F.col(dst).alias("dst")
-    ).localCheckpoint(eager=True)
+    close, n_far = counted_checkpoint(
+        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+    )
     far = close
     rounds = 0
-    converged = False
-    for _ in range(max_pow):
-        if far.isEmpty():
-            converged = True
-            break
+    while n_far and rounds < max_pow:
         rounds += 1
         f_u = far.select(F.col("src").alias("_u"), F.col("dst").alias("_m"))
         ext = (
@@ -531,24 +527,22 @@ def functional_closure(
             .select(F.col("_u").alias("src"), F.col("dst"))
         )
         close = close.unionByName(ext).localCheckpoint(eager=True)
-        far = (
+        far, n_far = counted_checkpoint(
             f_u.join(far, F.col("_m") == F.col("src"))
             .select(F.col("_u").alias("src"), F.col("dst"))
-            .localCheckpoint(eager=True)
         )
-    else:
-        # far non-empty after max_pow rounds is NOT by itself failure:
-        # when the longest path is exactly 2^max_pow, far still holds
-        # those (already-in-close) endpoint pairs. The closure is
-        # complete iff extending far one hop through close yields
-        # nothing — every far endpoint is a root with no outgoing edge.
-        if far.isEmpty():
-            converged = True
-        else:
-            f_u = far.select(F.col("src").alias("_u"), F.col("dst").alias("_m"))
-            converged = f_u.join(
-                close, F.col("_m") == F.col("src")
-            ).isEmpty()
+    # far non-empty after max_pow rounds is NOT by itself failure: when
+    # the longest path is exactly 2^max_pow, far still holds those
+    # (already-in-close) endpoint pairs. The closure is complete iff
+    # extending far one hop through close yields nothing — every far
+    # endpoint is a root with no outgoing edge. This probe runs only
+    # when the rounds are exhausted.
+    converged = (
+        n_far == 0
+        or far.join(
+            close.select(F.col("src").alias("_m")), F.col("dst") == F.col("_m")
+        ).isEmpty()
+    )
     if stats is not None:
         stats["rounds"] = rounds
     if not converged:

@@ -18,7 +18,7 @@ row content.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 
@@ -70,14 +70,29 @@ def broadcast_if_small(df: DataFrame, n_rows: int) -> DataFrame:
 
     ``n_rows`` is an upper bound on the vector's row count the caller
     already has (an exact node count, or the checkpointed edge count
-    that bounds it — one no-shuffle count on an already-materialized
-    RDD, amortized over every round of the loop). Above
+    that bounds it — observed by the job that checkpointed the table,
+    `counted_checkpoint`, and amortized over every round of the loop).
+    Above
     ``BROADCAST_MAX_ROWS`` the frame is returned unhinted and the
     planner's sort-merge / shuffled-hash join degrades gracefully.
     """
     if n_rows <= BROADCAST_MAX_ROWS:
         return F.broadcast(df)
     return df
+
+
+def counted_checkpoint(
+    df: DataFrame, where: Column | None = None
+) -> tuple[DataFrame, int]:
+    """Eager checkpoint of `df` and its row count — with `where`, the
+    count of rows where it holds — observed by the checkpoint job
+    itself (`DataFrame.observe`): one job where a checkpoint followed
+    by an `isEmpty()`/`count()`/`collect()` probe runs two. The count
+    feeds `broadcast_if_small` bounds and loop exits."""
+    obs = Observation()
+    n = F.count(F.lit(1)) if where is None else F.count(F.when(where, 1))
+    df = df.observe(obs, n.alias("rows")).localCheckpoint(eager=True)
+    return df, obs.get["rows"]
 
 
 def full_width(spark) -> int:

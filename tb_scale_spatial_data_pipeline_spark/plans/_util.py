@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.text import normalize_text, word_tokens
 from ..sources.catalog import load_table
 
 
@@ -56,3 +57,32 @@ def sql_dsum(expr: str, scale: int = 2) -> str:
 
 def sql_davg(expr: str, scale: int = 2) -> str:
     return f"CAST(SUM(CAST({expr} AS DECIMAL(18,{scale}))) AS DOUBLE) / COUNT({expr})"
+
+
+def _dec(col: str, p: int = 18, s: int = 2) -> Column:
+    return F.col(col).cast(f"decimal({p},{s})")
+
+
+# Exact discounted revenue: decimal × decimal is exact in both engines.
+def _revenue() -> Column:
+    return _dec("l_extendedprice") * (F.lit(1) - _dec("l_discount"))
+
+
+_SQL_REV = (
+    "CAST(l_extendedprice AS DECIMAL(18,2))"
+    " * (1 - CAST(l_discount AS DECIMAL(18,2)))"
+)
+
+
+def _words_df(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, w): each document's normalized word tokens."""
+    return t(spark, sf_dir, "documents").select(
+        "doc_id", word_tokens(normalize_text(F.col("text"))).alias("w")
+    )
+
+
+# DuckDB twin of word_tokens(normalize_text(text)).
+_SQL_WORDS = (
+    r"list_filter(regexp_split_to_array("
+    r"trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' '), x -> x <> '')"
+)

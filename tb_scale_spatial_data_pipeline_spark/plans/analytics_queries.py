@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.graphs import co_occurrence_pairs
+from ..operators.spread import counted_checkpoint
 from ._util import t, registry
 
 QUERIES, ORACLES, _q = registry()
@@ -1086,7 +1087,8 @@ def q_shapley_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.min("ts").alias("conv_ts"))
         .localCheckpoint(eager=True)  # read by touch + umask base
     )
-    chan = (
+    # nch: the channel-universe size
+    chan, nch = counted_checkpoint(
         ev.where(F.col("event_type") != "purchase")
         .select(F.col("event_type").alias("ch"))
         .distinct()
@@ -1096,7 +1098,6 @@ def q_shapley_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.row_number().over(Window.orderBy("ch")) - 1
             ).alias("bit"),  # bounded frame: |channels| rows
         )
-        .localCheckpoint(eager=True)
     )
     evt = ev.select(
         F.col("user_id").alias("t_uid"), "event_type", F.col("ts").alias("t_ts")
@@ -1125,7 +1126,6 @@ def q_shapley_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     mc = umask.groupBy("m").agg(F.count(F.lit(1)).alias("conv")).localCheckpoint(
         eager=True
     )
-    nch = chan.count()  # one scalar: the channel-universe size
     # Guard BEFORE materializing 2^n coalitions: with fixture drift
     # (say 40 channels) the eager checkpoint below would otherwise try
     # to build 2^40 rows before any bound check fired.
@@ -1333,13 +1333,15 @@ def q_att_propensity_strata(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(0)
         .alias("y"),
     )
-    strata = j.groupBy("seg", "yr").agg(
-        F.sum("tr").alias("n1"),
-        F.sum(F.when(F.col("tr") == 1, F.col("y")).otherwise(0)).alias("y1"),
-        F.sum(1 - F.col("tr")).alias("n0"),
-        F.sum(F.when(F.col("tr") == 0, F.col("y")).otherwise(0)).alias("y0"),
-    ).localCheckpoint(eager=True)  # read by total + supported arms
-    n_all = strata.count()  # one scalar: stratum census
+    # read by total + supported arms; n_all: the stratum census
+    strata, n_all = counted_checkpoint(
+        j.groupBy("seg", "yr").agg(
+            F.sum("tr").alias("n1"),
+            F.sum(F.when(F.col("tr") == 1, F.col("y")).otherwise(0)).alias("y1"),
+            F.sum(1 - F.col("tr")).alias("n0"),
+            F.sum(F.when(F.col("tr") == 0, F.col("y")).otherwise(0)).alias("y0"),
+        )
+    )
     sup = strata.where((F.col("n1") > 0) & (F.col("n0") > 0))
     contrib = F.round(
         F.col("n1")

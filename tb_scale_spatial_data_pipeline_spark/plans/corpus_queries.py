@@ -29,16 +29,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import normalize_text, word_tokens
-from ._util import t, registry
+from ._util import _SQL_WORDS, _words_df, t, registry
 
 QUERIES, ORACLES, _q = registry()
 
-
-# DuckDB twin of word_tokens(normalize_text(text)).
-_SQL_WORDS = (
-    r"list_filter(regexp_split_to_array("
-    r"trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' '), x -> x <> '')"
-)
 
 # Benchmark membership: every 7th doc plays the held-out eval suite.
 _BENCH_MOD = 7
@@ -54,12 +48,6 @@ _KANON_BAND = 4000
 # Gopher-style repetition ceilings (word-salad fixture calibrated).
 _TOP_WORD_FRAC = 0.10
 _TOP_BIGRAM_FRAC = 0.05
-
-
-def _words_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return t(spark, sf_dir, "documents").select(
-        "doc_id", word_tokens(normalize_text(F.col("text"))).alias("w")
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.graphs import co_occurrence_pairs, directed_edges, md5_thin
+from ..operators.spread import counted_checkpoint
 from ._util import t, registry
 
 QUERIES, ORACLES, _q = registry()
@@ -187,22 +188,23 @@ def q_kcore_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     eu = co_occurrence_pairs(cp, "p", "c").where(md5_thin(100000, _KCORE_THR))
-    edges = directed_edges(eu)
-    alive = edges.select(F.col("src").alias("node")).distinct().localCheckpoint()
+    edges, _ = directed_edges(eu)
+    alive, n_alive = counted_checkpoint(
+        edges.select(F.col("src").alias("node")).distinct()
+    )
     for _ in range(_KCORE_ROUNDS):
-        surviving = (
+        # peeling only shrinks the set: an unchanged count is the fixpoint
+        alive, n_surviving = counted_checkpoint(
             edges.join(alive.withColumnRenamed("node", "src"), "src")
             .join(alive.withColumnRenamed("node", "dst"), "dst")
             .groupBy("src")
             .agg(F.count("*").alias("deg"))
             .where(F.col("deg") >= _KCORE_K)
             .select(F.col("src").alias("node"))
-            .localCheckpoint()
         )
-        if surviving.count() == alive.count():
-            alive = surviving
+        if n_surviving == n_alive:
             break
-        alive = surviving
+        n_alive = n_surviving
     else:
         raise RuntimeError(
             f"k-core peel did not converge in {_KCORE_ROUNDS} rounds"

@@ -175,10 +175,12 @@ def run_full_pipeline(
     # 0.1/108 < 0.001, below the asserted ≥0.005 inter-region gap.
     def _build_metrics() -> DataFrame:
         tiled = halo_duplicate(pixels, tile_size=32, halo=8)
+        # checkpointed: the key and the metrics both read it, and FH04
+        # should run once
         segs = segment_tiles(
             tiled, ["median_ndvi", "max_ndvi", "final_label"],
             scale=0.1, min_size=15,
-        )
+        ).localCheckpoint(eager=True)
         canon = segs.groupBy("seg_id").agg(
             F.min(F.col("y").cast("long") * 96 + F.col("x")).alias("segment_key")
         )

@@ -31,7 +31,7 @@ from ..operators.graphs import (
     md5_thin,
     relax_min,
 )
-from ..operators.spread import broadcast_if_small
+from ..operators.spread import broadcast_if_small, counted_checkpoint
 from ._util import t, registry
 
 QUERIES, ORACLES, _q = registry()
@@ -115,11 +115,8 @@ def _sql_pagerank() -> str:
 
 @_q("pagerank_suppliers", _sql_pagerank())
 def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    edges = directed_edges(_undirected_edges(spark, sf_dir))
-    nodes = edges.select(F.col("src").alias("node")).distinct().localCheckpoint(
-        eager=True
-    )
-    n = nodes.count()  # one scalar to the driver, like CC's convergence count
+    edges, _ = directed_edges(_undirected_edges(spark, sf_dir))
+    nodes, n = counted_checkpoint(edges.select(F.col("src").alias("node")).distinct())
     # fold the (static) out-degree INTO the edge table once: each
     # iteration is then ONE join + one aggregate instead of two joins
     # — the same contribution multiset, half the per-round shuffles
@@ -207,14 +204,13 @@ def q_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     the observable that distinguishes synchronous fixed-round
     propagation from the frontier CC operators (which only expose the
     fixpoint)."""
-    edges = directed_edges(_undirected_edges(spark, sf_dir))
+    edges, _ = directed_edges(_undirected_edges(spark, sf_dir))
     nodes = edges.select(F.col("src").alias("node")).distinct()
-    labels = nodes.select("node", F.col("node").alias("label")).localCheckpoint(
-        eager=True
+    # the vector's row count bounds the loop's broadcast guard (it is
+    # invariant across rounds)
+    labels, n_nodes = counted_checkpoint(
+        nodes.select("node", F.col("node").alias("label"))
     )
-    # no-shuffle count on the materialized vector; bounds the loop's
-    # broadcast guard (row count is invariant across rounds)
-    n_nodes = labels.count()
 
     def _snap(k: int, lab: DataFrame) -> DataFrame:
         return lab.agg(
@@ -271,7 +267,7 @@ def _sql_bfs() -> str:
 
 @_q("bfs_hop_distance", _sql_bfs())
 def q_bfs_hop_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    edges = directed_edges(_undirected_edges(spark, sf_dir))
+    edges, _ = directed_edges(_undirected_edges(spark, sf_dir))
     nodes = edges.select(F.col("src").alias("node")).distinct()
     dist = bfs_levels(edges, nodes.where(F.col("node") % 10 == 0), _BFS_MAX_HOPS)
     return dist.select(F.col("node").alias("s_suppkey"), F.col("d").alias("hop"))
@@ -334,7 +330,7 @@ def _sql_sssp() -> str:
     )
 
 
-def _weighted_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _weighted_edges(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, int]:
     eu = _undirected_edges(spark, sf_dir)
     w = (
         F.conv(
@@ -353,11 +349,10 @@ def _relax_from_seeds(
 ) -> DataFrame:
     """`_SSSP_ROUNDS` rounds of `relax_min` over the weighted graph,
     from value 0 at the suppkey % 20 == 0 seeds."""
-    edges = _weighted_edges(spark, sf_dir)
     # |dist| <= |nodes| <= |directed edges| (every node appears as a
-    # src in the symmetrized table); one no-shuffle count on the
-    # checkpointed RDD bounds every round's broadcast guard
-    n_edges = edges.count()
+    # src in the symmetrized table): the edge count bounds every
+    # round's broadcast guard
+    edges, n_edges = _weighted_edges(spark, sf_dir)
     seeds = (
         edges.select(F.col("src").alias("node"))
         .where(F.col("node") % 20 == 0)
@@ -459,7 +454,7 @@ def _sql_adamic_adar() -> str:
 @_q("adamic_adar_topk", _sql_adamic_adar())
 def q_adamic_adar_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     eu = _undirected_edges(spark, sf_dir).localCheckpoint(eager=True)
-    edges = directed_edges(eu)
+    edges, _ = directed_edges(eu)
     deg = edges.groupBy(F.col("src").alias("x")).agg(
         # degree-1 nodes never center a wedge; unguarded 1/ln(1)
         # divides by zero (surfaced at sf0.001, where the sampled
@@ -499,7 +494,7 @@ def q_adamic_adar_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 @_q("link_prediction_jaccard", _sql_link_prediction())
 def q_link_prediction_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     eu = _undirected_edges(spark, sf_dir).localCheckpoint(eager=True)
-    edges = directed_edges(eu)
+    edges, _ = directed_edges(eu)
     deg = edges.groupBy(F.col("src").alias("x")).agg(F.count(F.lit(1)).alias("d"))
     e1 = edges.select(F.col("src").alias("b"), F.col("dst").alias("a"))
     e2 = edges.select(F.col("src").alias("b"), F.col("dst").alias("c"))
@@ -590,12 +585,13 @@ def _sql_ppr() -> str:
 
 @_q("personalized_pagerank", _sql_ppr())
 def q_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    edges = directed_edges(_undirected_edges(spark, sf_dir))
-    nodes = edges.select(F.col("src").alias("node")).distinct().localCheckpoint(
-        eager=True
+    edges, _ = directed_edges(_undirected_edges(spark, sf_dir))
+    # the node count bounds the per-round broadcast guard (the rank
+    # vector spans all nodes)
+    nodes, n_nodes = counted_checkpoint(
+        edges.select(F.col("src").alias("node")).distinct()
     )
-    seeds = nodes.where(F.col("node") % 20 == 0).localCheckpoint(eager=True)
-    ns = seeds.count()  # one scalar, like pagerank's n
+    seeds, ns = counted_checkpoint(nodes.where(F.col("node") % 20 == 0))
     # degree folded into the edge table once (see pagerank_suppliers):
     # one join + one aggregate per iteration
     edges_deg = (
@@ -616,9 +612,6 @@ def q_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.lit(0.0))
         .alias("restart"),
     ).localCheckpoint(eager=True)
-    # no-shuffle count on the checkpointed node set: bounds the
-    # per-round broadcast guard (the rank vector spans all nodes)
-    n_nodes = nodes.count()
     ranks = restart.select("node", F.col("restart").alias("rank"))
     for _ in range(_PPR_ITERS):
         contrib = aggregate_messages(
@@ -680,7 +673,7 @@ _PL_DMIN = 2
     """,
 )
 def q_degree_powerlaw_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    edges = directed_edges(_undirected_edges(spark, sf_dir))
+    edges, _ = directed_edges(_undirected_edges(spark, sf_dir))
     deg = edges.groupBy(F.col("src").alias("node")).agg(
         F.count(F.lit(1)).alias("d")
     )
@@ -743,7 +736,7 @@ def q_degree_powerlaw_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    edges = directed_edges(_undirected_edges(spark, sf_dir))
+    edges, _ = directed_edges(_undirected_edges(spark, sf_dir))
     deg = edges.groupBy(F.col("src").alias("node")).agg(
         F.count(F.lit(1)).alias("d")
     )
@@ -840,7 +833,10 @@ def _sql_resilience() -> str:
 
 @_q("hub_removal_resilience", _sql_resilience())
 def q_hub_removal_resilience(spark: SparkSession, sf_dir: str) -> DataFrame:
-    edges = directed_edges(_undirected_edges(spark, sf_dir))
+    # every label vector is bounded by its node count <= |edges|
+    # (edges_cut is a subset of edges): the edge count bounds both
+    # variants' broadcast guard
+    edges, n_edges = directed_edges(_undirected_edges(spark, sf_dir))
     deg = edges.groupBy(F.col("src").alias("node")).agg(
         F.count(F.lit(1)).alias("d")
     )
@@ -850,11 +846,6 @@ def q_hub_removal_resilience(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(hubs.withColumnRenamed("node", "dst"), "dst", "left_anti")
         .localCheckpoint(eager=True)
     )
-
-    # every label vector is bounded by its node count <= |edges|
-    # (edges_cut is a subset of edges): one no-shuffle count on the
-    # checkpointed table bounds both variants' broadcast guard
-    n_edges = edges.count()
     out = None
     for tag, e in (("full", edges), ("cut", edges_cut)):
         nodes = e.select(F.col("src").alias("node")).distinct().localCheckpoint(
@@ -948,7 +939,7 @@ def _sql_closeness() -> str:
 def q_closeness_centrality_sampled(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    edges = directed_edges(_undirected_edges(spark, sf_dir))
+    edges, _ = directed_edges(_undirected_edges(spark, sf_dir))
     nodes = edges.select(F.col("src").alias("node")).distinct()
     seeds = nodes.where(F.col("node") % 10 == 0).select(
         F.col("node").alias("seed"), "node"
@@ -1020,7 +1011,7 @@ def _sql_diameter() -> str:
 
 @_q("graph_diameter_sweep", _sql_diameter())
 def q_graph_diameter_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    edges = directed_edges(_undirected_edges(spark, sf_dir))
+    edges, _ = directed_edges(_undirected_edges(spark, sf_dir))
     nodes = edges.select(F.col("src").alias("node")).distinct()
     start = nodes.agg(F.min("node").alias("node"))
     d1 = bfs_levels(edges, start, _DIAM_MAX_HOPS)
@@ -1110,10 +1101,12 @@ def q_community_label_propagation(
     label checksum): community counts stabilize in a handful of
     rounds on the fixture graph, and the checksum makes the hash
     sensitive to every node's label, not just the aggregate counts."""
-    edges = directed_edges(_undirected_edges(spark, sf_dir))
+    edges, _ = directed_edges(_undirected_edges(spark, sf_dir))
     nodes = edges.select(F.col("src").alias("node")).distinct()
-    labels = nodes.select("node", F.col("node").alias("label")).localCheckpoint(
-        eager=True
+    # the vector's row count bounds the loop's broadcast guard (it is
+    # invariant across rounds)
+    labels, n_nodes = counted_checkpoint(
+        nodes.select("node", F.col("node").alias("label"))
     )
 
     def _snap(k: int, lab: DataFrame) -> DataFrame:
@@ -1127,9 +1120,6 @@ def q_community_label_propagation(
             ),
         )
 
-    # no-shuffle count on the materialized vector; bounds the loop's
-    # broadcast guard (row count is invariant across rounds)
-    n_nodes = labels.count()
     snaps = [_snap(0, labels)]
     for k in range(1, _CLP_ITERS + 1):
         cnt = aggregate_messages(
@@ -1249,10 +1239,10 @@ def _sql_betweenness() -> str:
 
 @_q("betweenness_sampled", _sql_betweenness())
 def q_betweenness_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
-    edges = directed_edges(_undirected_edges(spark, sf_dir))
+    edges, n_edges = directed_edges(_undirected_edges(spark, sf_dir))
     nodes = edges.select(F.col("src").alias("node")).distinct()
     seeds = nodes.orderBy("node").limit(_BC_SEEDS)
-    levels, bound = brandes_forward(edges, seeds, _BC_SEEDS, _BC_MAX_HOPS)
+    levels, bound = brandes_forward(edges, n_edges, seeds, _BC_SEEDS, _BC_MAX_HOPS)
     deltas, _ = brandes_backward(edges, levels, bound)
     parts = [deltas[k] for k in sorted(deltas)]
     if not parts:  # all delta levels empty: keep the (empty) shape
@@ -1343,10 +1333,10 @@ def _sql_ktruss() -> str:
 
 @_q("ktruss_peeling", _sql_ktruss())
 def q_ktruss_peeling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    eu = _undirected_edges(spark, sf_dir).localCheckpoint(eager=True)
-    # |deg rows| <= 2*|eu| at every round (peeling only shrinks cur);
-    # one no-shuffle count bounds the degree-table broadcast guard
-    n_node_bound = 2 * eu.count()
+    # |deg rows| <= 2*|eu| at every round (peeling only shrinks cur):
+    # the edge count bounds the degree-table broadcast guard
+    eu, n_eu = counted_checkpoint(_undirected_edges(spark, sf_dir))
+    n_node_bound = 2 * n_eu
     snaps = [
         eu.agg(
             F.lit(0).cast("int").alias("round"),
@@ -1851,8 +1841,7 @@ def _sql_nation_modularity() -> str:
 
 @_q("nation_modularity", _sql_nation_modularity())
 def q_nation_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    eu = _undirected_edges(spark, sf_dir).localCheckpoint(eager=True)
-    m = eu.count()  # one scalar: the edge total
+    eu, m = counted_checkpoint(_undirected_edges(spark, sf_dir))  # m: edge total
     lab = t(spark, sf_dir, "supplier").select(
         F.col("s_suppkey").alias("node"),
         F.col("s_nationkey").cast("bigint").alias("com"),
@@ -2114,10 +2103,9 @@ def _sql_eigenvector() -> str:
 
 @_q("eigenvector_centrality", _sql_eigenvector())
 def q_eigenvector_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    edges = directed_edges(_undirected_edges(spark, sf_dir))
-    # |x| <= |directed edges|: one no-shuffle count on the checkpointed
-    # RDD bounds every round's broadcast guard
-    n_edges = edges.count()
+    # |x| <= |directed edges|: the edge count bounds every round's
+    # broadcast guard
+    edges, n_edges = directed_edges(_undirected_edges(spark, sf_dir))
     x = edges.select(F.col("src").alias("node")).distinct().select(
         "node", F.lit(1.0).alias("x")
     )
@@ -2239,10 +2227,10 @@ def _sql_edge_betweenness() -> str:
 
 @_q("edge_betweenness_topk", _sql_edge_betweenness())
 def q_edge_betweenness_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    edges = directed_edges(_undirected_edges(spark, sf_dir))
+    edges, n_edges = directed_edges(_undirected_edges(spark, sf_dir))
     nodes = edges.select(F.col("src").alias("node")).distinct()
     seeds = nodes.orderBy("node").limit(_BC_SEEDS)
-    levels, bound = brandes_forward(edges, seeds, _BC_SEEDS, _BC_MAX_HOPS)
+    levels, bound = brandes_forward(edges, n_edges, seeds, _BC_SEEDS, _BC_MAX_HOPS)
     _, creds = brandes_backward(edges, levels, bound)
     if not creds:  # all credit levels empty: keep the (empty) shape
         creds = [
@@ -2344,7 +2332,7 @@ def q_weighted_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).distinct()
     ew0 = co_occurrence_pairs(ps, "l_partkey", "l_suppkey", weighted=True)
     ew = ew0.where(md5_thin(1000, EDGE_THIN_BELOW))
-    wedges = directed_edges(ew, "w")
+    wedges, _ = directed_edges(ew, "w")
     nodes = wedges.select(F.col("src").alias("node")).distinct()
     n = nodes.count()  # one scalar
     wout = wedges.groupBy(F.col("src").alias("node")).agg(
@@ -2442,11 +2430,10 @@ def _sql_katz() -> str:
 
 @_q("katz_centrality", _sql_katz())
 def q_katz_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    edges = directed_edges(_undirected_edges(spark, sf_dir))
+    # |x| <= |directed edges|: the edge count bounds every round's
+    # broadcast guard
+    edges, n_edges = directed_edges(_undirected_edges(spark, sf_dir))
     nodes = edges.select(F.col("src").alias("node")).distinct()
-    # |x| <= |directed edges|: one no-shuffle count on the checkpointed
-    # RDD bounds every round's broadcast guard
-    n_edges = edges.count()
     x = nodes.select("node", F.lit(1.0).alias("x"))
     for _ in range(_KATZ_ITERS):
         contrib = aggregate_messages(edges, x, n_edges, F.sum("x").alias("s"))
@@ -2519,7 +2506,7 @@ def q_katz_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_graphlet_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     eu = _undirected_edges(spark, sf_dir).localCheckpoint(eager=True)
-    edges = directed_edges(eu)
+    edges, _ = directed_edges(eu)
     deg = edges.groupBy(F.col("src").alias("node")).agg(
         F.count(F.lit(1)).alias("d")
     )
@@ -2658,7 +2645,7 @@ def _sql_bipartite() -> str:
 @_q("graph_bipartite_check", _sql_bipartite())
 def q_graph_bipartite_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     eu = _undirected_edges(spark, sf_dir).localCheckpoint(eager=True)
-    edges = directed_edges(eu)
+    edges, _ = directed_edges(eu)
     nodes = edges.select(F.col("src").alias("node")).distinct()
     dist = bfs_levels(edges, nodes.where(F.col("node") % 10 == 0), _BFS_MAX_HOPS)
     la = dist.select(F.col("node").alias("u"), F.col("d").alias("ha"))
@@ -2770,18 +2757,18 @@ def q_brand_transition_scc(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     # iterative doubling on the bounded node set: reach = reach o edges
-    reach = nodes.select(F.col("v").alias("s"), F.col("v").alias("t")).union(
-        edges
-    ).distinct().localCheckpoint(eager=True)
-    prev = reach.count()
+    reach, prev = counted_checkpoint(
+        nodes.select(F.col("v").alias("s"), F.col("v").alias("t"))
+        .union(edges)
+        .distinct()
+    )
     while True:
         step = (
             reach.alias("r")
             .join(edges.alias("e"), F.col("r.t") == F.col("e.s"))
             .select(F.col("r.s").alias("s"), F.col("e.t").alias("t"))
         )
-        reach = reach.union(step).distinct().localCheckpoint(eager=True)
-        cur = reach.count()
+        reach, cur = counted_checkpoint(reach.union(step).distinct())
         if cur == prev:
             break
         prev = cur

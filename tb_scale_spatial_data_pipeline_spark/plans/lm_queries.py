@@ -32,27 +32,16 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import normalize_text, word_tokens
-from ._util import t, registry
+from ._util import _SQL_WORDS, _words_df, t, registry
 
 QUERIES, ORACLES, _q = registry()
 
-
-_SQL_WORDS = (
-    r"list_filter(regexp_split_to_array("
-    r"trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' '), x -> x <> '')"
-)
 
 _PMI_WINDOW = 2
 _PMI_MIN_COUNT = 30
 _PACK_CAP = 256
 _PACK_SHARD = 128
 _PPL_HOLDOUT_MOD = 5
-
-
-def _words_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return t(spark, sf_dir, "documents").select(
-        "doc_id", word_tokens(normalize_text(F.col("text"))).alias("w")
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -995,7 +984,7 @@ def _sql_textrank() -> str:
 @_q("textrank_keywords", _sql_textrank())
 def q_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.graphs import aggregate_messages
-    from ..operators.spread import spread_cpu
+    from ..operators.spread import counted_checkpoint, spread_cpu
 
     # the window-pair explode is the CPU hot spot and otherwise fuses
     # into the single-split scan task; no-op at production split counts
@@ -1037,13 +1026,11 @@ def q_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .localCheckpoint(eager=True)
     )
-    # checkpoint the node set once (it feeds every round's left join)
-    nodes = (
-        wedges.select(F.col("src").alias("node"))
-        .distinct()
-        .localCheckpoint(eager=True)
+    # checkpoint the node set once (it feeds every round's left join);
+    # its row count bounds the broadcast guard
+    nodes, n_nodes = counted_checkpoint(
+        wedges.select(F.col("src").alias("node")).distinct()
     )
-    n_nodes = nodes.count()  # no-shuffle; bounds the broadcast guard
     r = nodes.select("node", F.lit(1.0).alias("rank"))
     for _ in range(_TR_ITERS):
         # the rank vector is keyword-node metadata bounded by the

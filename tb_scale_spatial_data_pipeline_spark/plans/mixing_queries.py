@@ -25,15 +25,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ._util import t, registry
+from ._util import _SQL_WORDS, t, registry
 
 QUERIES, ORACLES, _q = registry()
 
-
-_SQL_WORDS = (
-    r"list_filter(regexp_split_to_array("
-    r"trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' '), x -> x <> '')"
-)
 
 _MIX_TEMP = 2.0  # temperature: flattens the source distribution
 _GRAM_N = 8

@@ -25,16 +25,15 @@ Cross-engine determinism notes specific to this family:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from collections.abc import Callable
+
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ._util import sql_davg, sql_dsum, t, registry
+from ..operators.spread import counted_checkpoint
+from ._util import _dec, sql_davg, sql_dsum, t, registry
 
 QUERIES, ORACLES, _q = registry()
-
-
-def _dec(col: str, p: int = 18, s: int = 2):
-    return F.col(col).cast(f"decimal({p},{s})")
 
 
 # ---------------------------------------------------------------------------
@@ -189,17 +188,69 @@ def q_grouping_sets_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 # is ever needed.
 #
 # Spark has no recursive CTE; the explosion runs as a WAVEFRONT loop
-# (one equi-join frontier->edges per level, lineage truncated by
-# localCheckpoint, driver sees only the empty-check). Wavefront, NOT
-# pointer doubling (contrast operators/graphs.functional_closure):
-# out-degree here is 2, so doubling would square the intermediate
-# pair count for no round savings at depth ~log2 N — doubling wins
-# on deep CHAINS, wavefronts win on shallow bushy TREES; the depth
-# is the log of the table size, 11 rounds at sf0.01.
+# (`_bom_levels`: one equi-join frontier->edges per level, lineage
+# truncated by a checkpoint whose job also counts the level, so the
+# driver sees only that count). Wavefront, NOT pointer doubling
+# (contrast operators/graphs.functional_closure): out-degree here is
+# 2, so doubling would square the intermediate pair count for no
+# round savings at depth ~log2 N — doubling wins on deep CHAINS,
+# wavefronts win on shallow bushy TREES; the depth is the log of the
+# table size, 11 rounds at sf0.01.
 #
 # Output is the per-(root, depth) aggregate (counts + exact quantity
 # sums) — bounded at 4 roots x depth rows regardless of scale.
 _BOM_ROOTS = (1, 2, 3, 4)
+_BOM_MAX_DEPTH = 64  # cycle guard: containment must be acyclic
+
+
+def _bom_edges(spark: SparkSession, sf_dir: str, modulus: int) -> DataFrame:
+    """The synthesized BOM tree, (parent, child, w) with part p
+    containing 2p and 2p+1 and edge weight w = child % modulus + 1;
+    checkpointed, as every wavefront level reads it."""
+    part = t(spark, sf_dir, "part")
+    maxpk = part.agg(F.max("p_partkey")).collect()[0][0]  # one scalar
+    child = F.explode(
+        F.array(F.col("p_partkey") * 2, F.col("p_partkey") * 2 + 1)
+    ).alias("child")
+    return (
+        part.select(F.col("p_partkey").alias("parent"), child)
+        .where(F.col("child") <= maxpk)
+        .withColumn("w", F.col("child") % modulus + 1)
+        .localCheckpoint(eager=True)
+    )
+
+
+def _bom_levels(
+    edges: DataFrame,
+    col: str,
+    seed: int,
+    step: Callable[[Column, Column], Column],
+    what: str,
+) -> DataFrame:
+    """Wavefront walk of the `_bom_edges` tree from every `_BOM_ROOTS`
+    root: (root, node, col, depth) for every node at depth 0..63, where
+    `col` starts at `seed` on the roots and each edge carries it as
+    step(parent's col, edge w). Each level is one checkpoint job that
+    also counts it (`counted_checkpoint`); the walk ends at the first
+    empty level, and a non-empty level at depth 64 raises (a cycle)."""
+    frontier = edges.sparkSession.createDataFrame(
+        [(r, r, seed, 0) for r in _BOM_ROOTS],
+        f"root bigint, node bigint, {col} bigint, depth int",
+    )
+    levels = frontier
+    for _ in range(_BOM_MAX_DEPTH):
+        frontier, rows = counted_checkpoint(
+            frontier.join(edges, frontier.node == edges.parent).select(
+                "root",
+                F.col("child").alias("node"),
+                step(frontier[col], edges.w).alias(col),
+                (F.col("depth") + 1).alias("depth"),
+            )
+        )
+        if rows == 0:
+            return levels
+        levels = levels.unionByName(frontier)
+    raise RuntimeError(f"{what} exceeded depth {_BOM_MAX_DEPTH} — cycle?")
 
 
 def _sql_bom() -> str:
@@ -232,41 +283,13 @@ def _sql_bom() -> str:
 
 @_q("recursive_bom_explosion", _sql_bom())
 def q_recursive_bom_explosion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    part = t(spark, sf_dir, "part")
-    maxpk = part.agg(F.max("p_partkey")).collect()[0][0]  # one scalar
-    child = F.explode(
-        F.array(F.col("p_partkey") * 2, F.col("p_partkey") * 2 + 1)
-    ).alias("child")
-    edges = (
-        part.select(F.col("p_partkey").alias("parent"), child)
-        .where(F.col("child") <= maxpk)
-        .withColumn("qty", F.col("child") % 5 + 1)
-        .localCheckpoint(eager=True)  # read once per wavefront round
+    allp = _bom_levels(
+        _bom_edges(spark, sf_dir, 5),
+        "qty",
+        1,
+        lambda qty, w: qty * w,
+        "BOM explosion",
     )
-    frontier = spark.createDataFrame(
-        [(r, r, 1, 0) for r in _BOM_ROOTS],
-        "root bigint, node bigint, qty bigint, depth int",
-    )
-    out = []
-    depth = 0
-    while not frontier.isEmpty():
-        out.append(frontier)
-        depth += 1
-        if depth > 64:  # cycle guard: containment must be acyclic
-            raise RuntimeError("BOM explosion exceeded depth 64 — cycle?")
-        frontier = (
-            frontier.join(edges, frontier.node == edges.parent)
-            .select(
-                "root",
-                F.col("child").alias("node"),
-                (frontier.qty * edges.qty).alias("qty"),
-                (F.col("depth") + 1).alias("depth"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    allp = out[0]
-    for f in out[1:]:
-        allp = allp.unionByName(f)
     return (
         allp.where(F.col("depth") > 0)
         .groupBy("root", "depth")
@@ -386,41 +409,13 @@ def q_percent_rank_tie_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_bom_critical_path(spark: SparkSession, sf_dir: str) -> DataFrame:
-    part = t(spark, sf_dir, "part")
-    maxpk = part.agg(F.max("p_partkey")).collect()[0][0]  # one scalar
-    child = F.explode(
-        F.array(F.col("p_partkey") * 2, F.col("p_partkey") * 2 + 1)
-    ).alias("child")
-    edges = (
-        part.select(F.col("p_partkey").alias("parent"), child)
-        .where(F.col("child") <= maxpk)
-        .withColumn("w", F.col("child") % 7 + 1)
-        .localCheckpoint(eager=True)
+    allp = _bom_levels(
+        _bom_edges(spark, sf_dir, 7),
+        "cost",
+        0,
+        lambda cost, w: cost + w,
+        "critical path",
     )
-    frontier = spark.createDataFrame(
-        [(r, r, 0, 0) for r in _BOM_ROOTS],
-        "root bigint, node bigint, cost bigint, depth int",
-    )
-    out = []
-    depth = 0
-    while not frontier.isEmpty():
-        out.append(frontier)
-        depth += 1
-        if depth > 64:
-            raise RuntimeError("critical path exceeded depth 64 — cycle?")
-        frontier = (
-            frontier.join(edges, frontier.node == edges.parent)
-            .select(
-                "root",
-                F.col("child").alias("node"),
-                (frontier.cost + edges.w).alias("cost"),
-                (F.col("depth") + 1).alias("depth"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    allp = out[0]
-    for f in out[1:]:
-        allp = allp.unionByName(f)
     return (
         allp.groupBy("root")
         .agg(

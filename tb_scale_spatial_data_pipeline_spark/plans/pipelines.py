@@ -329,7 +329,9 @@ def _build_e3(spark: SparkSession) -> DataFrame:
         & (px.y >= F.col("y0")) & (px.y < F.col("y0") + F.col("h")),
     ).select("x", "y", (F.col("code") * 64.0).alias("v"))
     tiled = halo_duplicate(feat, tile_size=48, halo=8)
-    segs = segment_tiles(tiled, ["v"])  # scale=35, min_size=15
+    # scale=35, min_size=15; checkpointed: the key and the metrics both
+    # read it, and FH04 should run once
+    segs = segment_tiles(tiled, ["v"]).localCheckpoint(eager=True)
     canon = segs.groupBy("seg_id").agg(
         F.min(F.col("y").cast("long") * 96 + F.col("x")).alias("segment_key")
     )
@@ -601,7 +603,9 @@ def q_raster_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_geometry.py.)"""
     img = _block_field(spark)
     tiled = halo_duplicate(img, tile_size=32, halo=8)
-    segs = segment_tiles(tiled, ["b1", "b2"])
+    # checkpointed: the key and the metrics both read it, and FH04
+    # should run once
+    segs = segment_tiles(tiled, ["b1", "b2"]).localCheckpoint(eager=True)
     keyed = segs.groupBy("seg_id").agg(
         F.min("x").alias("min_x"), F.min("y").alias("min_y")
     )
@@ -750,7 +754,9 @@ def q_raster_polygon_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     img = _block_field(spark)
     tiled = halo_duplicate(img, tile_size=32, halo=8)
-    segs = segment_tiles(tiled, ["b1", "b2"])
+    # checkpointed: the key and the metrics both read it, and FH04
+    # should run once
+    segs = segment_tiles(tiled, ["b1", "b2"]).localCheckpoint(eager=True)
     keyed = segs.groupBy("seg_id").agg(
         F.min("x").alias("min_x"), F.min("y").alias("min_y")
     )

@@ -31,24 +31,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ._util import t, registry
+from ._util import _SQL_REV, _dec, _revenue, t, registry
 
 QUERIES, ORACLES, _q = registry()
-
-
-def _dec(col: str, p: int = 18, s: int = 2):
-    return F.col(col).cast(f"decimal({p},{s})")
-
-
-# Exact discounted revenue: decimal × decimal is exact in both engines.
-def _revenue():
-    return _dec("l_extendedprice") * (F.lit(1) - _dec("l_discount"))
-
-
-_SQL_REV = (
-    "CAST(l_extendedprice AS DECIMAL(18,2))"
-    " * (1 - CAST(l_discount AS DECIMAL(18,2)))"
-)
 
 
 # ---------------------------------------------------------------------------

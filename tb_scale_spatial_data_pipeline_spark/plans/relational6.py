@@ -24,24 +24,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ._util import t, registry
+from ..operators.spread import counted_checkpoint
+from ._util import _SQL_REV, _dec, _revenue, t, registry
 from .graph_queries import _undirected_edges
 
 QUERIES, ORACLES, _q = registry()
-
-
-def _dec(col: str, p: int = 18, s: int = 2):
-    return F.col(col).cast(f"decimal({p},{s})")
-
-
-def _revenue():
-    return _dec("l_extendedprice") * (F.lit(1) - _dec("l_discount"))
-
-
-_SQL_REV = (
-    "CAST(l_extendedprice AS DECIMAL(18,2))"
-    " * (1 - CAST(l_discount AS DECIMAL(18,2)))"
-)
 
 
 # ---------------------------------------------------------------------------
@@ -862,12 +849,11 @@ def q_hierarchy_subtree_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).localCheckpoint(eager=True)
     frontier = pairs
     for _ in range(40):  # depth of a binary heap over ~10^12 keys
-        step = (
+        step, rows = counted_checkpoint(
             frontier.join(edges, frontier["node"] == edges["parent"])
             .select("anc", F.col("child").alias("node"))
-            .localCheckpoint(eager=True)
         )
-        if step.limit(1).count() == 0:
+        if rows == 0:
             break
         pairs = pairs.unionByName(step).localCheckpoint(eager=True)
         frontier = step

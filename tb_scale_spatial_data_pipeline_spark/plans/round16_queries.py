@@ -41,7 +41,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.graphs import aggregate_messages, directed_edges
-from ..operators.spread import broadcast_if_small
+from ..operators.spread import broadcast_if_small, counted_checkpoint
 from ._util import t, registry
 from .graph_queries import _SQL_EDGES as _EDGES_CTE
 from .graph_queries import _undirected_edges
@@ -949,7 +949,9 @@ def _sql_wl() -> str:
 
 @_q("weisfeiler_leman_colors", _sql_wl())
 def q_weisfeiler_leman_colors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    edges = directed_edges(_undirected_edges(spark, sf_dir))
+    # |colors| <= |directed edges|: the edge count bounds every round's
+    # broadcast guard
+    edges, n_edges = directed_edges(_undirected_edges(spark, sf_dir))
     colors = (
         edges.groupBy(F.col("src").alias("node"))
         .agg(
@@ -959,9 +961,6 @@ def q_weisfeiler_leman_colors(spark: SparkSession, sf_dir: str) -> DataFrame:
         # lazy-checkpoint so the degree aggregation runs once
         .localCheckpoint(eager=False)
     )
-    # |colors| <= |directed edges|: one no-shuffle count on the
-    # checkpointed RDD bounds every round's broadcast guard
-    n_edges = edges.count()
     rounds = [colors]
     for _ in range(_WL_ROUNDS):
         prev = rounds[-1]
@@ -2299,7 +2298,7 @@ def q_hoeffding_d_dependence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_distance_correlation_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    spine = _spine(spark, sf_dir).localCheckpoint(eager=True)
+    spine, n = counted_checkpoint(_spine(spark, sf_dir))  # bounded day spine
     b = spine.select(F.col("rn").alias("rn2"), F.col("y").alias("y2"))
     cross = spine.crossJoin(b)
     ady = F.abs(F.col("y") - F.col("y2")).cast("decimal(38,0)")
@@ -2313,7 +2312,6 @@ def q_distance_correlation_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(ady * ady).cast("decimal(38,0)").alias("vyy"),
         F.sum(adt * adt).cast("decimal(38,0)").alias("vtt"),
     )
-    n = spine.count()  # bounded day spine
     tot = rowsums.agg(
         F.sum("ay").cast("decimal(38,0)").alias("say"),
         F.sum("at").cast("decimal(38,0)").alias("sat"),

@@ -13,9 +13,16 @@ SF_SMOKE = "/root/testdata/sf0.001"
 
 @pytest.fixture(scope="session")
 def spark():
+    from tb_scale_spatial_data_pipeline_spark.operators.spread import (
+        counted_checkpoint,
+    )
     from tb_scale_spatial_data_pipeline_spark.session import get_spark
 
     s = get_spark("tests", cpus=8)
+    # Once a Spark 4.1.2 session has observed a metric, a task closure
+    # that captures the session no longer serializes. Observe one here,
+    # so every test runs in that state whatever the test order.
+    counted_checkpoint(s.range(1))
     yield s
 
 

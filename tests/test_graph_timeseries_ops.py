@@ -20,7 +20,7 @@ def test_sssp_matches_driver_dijkstra(spark):
         _weighted_edges,
     )
 
-    edges = _weighted_edges(spark, SF_SMOKE).collect()
+    edges = _weighted_edges(spark, SF_SMOKE)[0].collect()
     adj: dict[int, list[tuple[int, int]]] = {}
     for r in edges:
         adj.setdefault(r.src, []).append((r.dst, r.w))
@@ -490,7 +490,7 @@ def test_sssp_satisfies_relaxation_invariant(spark):
         r.s_suppkey: r.dist
         for r in QUERIES["sssp_weighted"](spark, SF_SMOKE).collect()
     }
-    for e in _weighted_edges(spark, SF_SMOKE).collect():
+    for e in _weighted_edges(spark, SF_SMOKE)[0].collect():
         if e.src in dist:
             assert dist.get(e.dst, float("inf")) <= dist[e.src] + e.w
 

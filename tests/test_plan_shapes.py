@@ -520,7 +520,8 @@ def _small_eu(spark):
 @pytest.mark.parametrize("carry", [(), ("w",)], ids=["plain", "weighted"])
 def test_directed_edges_matches_inline_form(spark, carry):
     """directed_edges must return exactly the inline two-select union
-    it replaced: both directions of every edge, carried columns kept."""
+    it replaced: both directions of every edge, carried columns kept,
+    and the row count of what it returns."""
     from pyspark.sql import functions as F
 
     from tb_scale_spatial_data_pipeline_spark.operators.graphs import directed_edges
@@ -529,10 +530,11 @@ def test_directed_edges_matches_inline_form(spark, carry):
     ref = eu.select(F.col("u").alias("src"), F.col("v").alias("dst"), *carry).union(
         eu.select(F.col("v").alias("src"), F.col("u").alias("dst"), *carry)
     )
-    got = directed_edges(eu, *carry)
+    got, n_edges = directed_edges(eu, *carry)
     assert got.columns == ["src", "dst", *carry]
     rows = sorted(got.collect())
     assert rows == sorted(ref.collect()) and len(rows) == 2 * len(_SMALL_GRAPH)
+    assert n_edges == len(rows)
 
 
 @pytest.mark.parametrize("by", [(), ("label",)], ids=["node", "node_label"])
@@ -546,7 +548,7 @@ def test_aggregate_messages_matches_inline_form(spark, by):
         directed_edges,
     )
 
-    edges = directed_edges(_small_eu(spark))
+    edges, _ = directed_edges(_small_eu(spark))
     vec = edges.select(F.col("src").alias("node")).distinct().select(
         "node", (F.col("node") * 0.5).alias("x"), (F.col("node") % 3).alias("label")
     )
@@ -598,7 +600,7 @@ def test_bfs_levels_matches_reference(spark, monkeypatch, keys, starts, max_hops
 
     from tb_scale_spatial_data_pipeline_spark.operators import graphs
 
-    edges = graphs.directed_edges(_small_eu(spark))
+    edges, _ = graphs.directed_edges(_small_eu(spark))
     start = spark.createDataFrame([(s,) for s in starts], "node long")
     if keys == ("seed", "node"):
         start = start.select(F.col("node").alias("seed"), "node")
@@ -620,6 +622,160 @@ def test_bfs_levels_matches_reference(spark, monkeypatch, keys, starts, max_hops
     assert len(rows) == len(got_set)  # one row per (key, node)
     assert got_set == _python_bfs(starts, max_hops)
     assert len(probes) == levels
+
+
+def _python_bom(maxpk, modulus, seed, step):
+    """Every (root, node, carried, depth) of the BOM tree walk, the
+    tree and weights as plans/olap_queries.py::_bom_edges builds them."""
+    rows, level = [], [(r, r, seed, 0) for r in (1, 2, 3, 4)]
+    while level:
+        rows += level
+        level = [
+            (root, c, step(v, c % modulus + 1), d + 1)
+            for root, node, v, d in level
+            for c in (2 * node, 2 * node + 1)
+            if c <= maxpk
+        ]
+    return sorted(rows)
+
+
+@pytest.mark.parametrize(
+    "loop",
+    [
+        "functional_closure",
+        "connected_components",
+        "directed_edges",
+        "brandes_forward",
+        "bom_walk",
+    ],
+)
+def test_no_probe_after_checkpoint(spark, monkeypatch, loop):
+    """The row counts these loops test — broadcast bounds and loop
+    exits — come from the jobs that checkpoint their frames: built
+    with DataFrame.count, isEmpty and collect raising, each loop still
+    builds, and what it built collects to the current answer."""
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    from tb_scale_spatial_data_pipeline_spark.operators import graphs
+    from tb_scale_spatial_data_pipeline_spark.operators.dedup import (
+        connected_components,
+    )
+    from tb_scale_spatial_data_pipeline_spark.plans import olap_queries
+
+    eu = _small_eu(spark)
+    if loop == "functional_closure":
+        chain = spark.createDataFrame(
+            [(i, i + 1) for i in range(9)], "src bigint, dst bigint"
+        )
+        build = lambda: graphs.functional_closure(chain)
+        read = lambda df: sorted((r.src, r.dst) for r in df.collect())
+        want = [(i, j) for i in range(9) for j in range(i + 1, 10)]
+    elif loop == "connected_components":
+        edges = eu.select(F.col("u").alias("id_a"), F.col("v").alias("id_b"))
+        build = lambda: connected_components(edges)
+        read = lambda df: sorted((r.node, r.cluster_id) for r in df.collect())
+        comps = ((1, 2, 3, 4), (10, 11, 12), (20, 21))
+        want = [(n, min(c)) for c in comps for n in c]
+    elif loop == "directed_edges":
+        build = lambda: graphs.directed_edges(eu)
+        read = lambda out: (out[1], sorted(out[0].select("src", "dst").collect()))
+        want = (14, sorted([*_SMALL_GRAPH, *((v, u) for u, v in _SMALL_GRAPH)]))
+    elif loop == "brandes_forward":
+        edges, n_edges = graphs.directed_edges(eu)
+        seeds = spark.createDataFrame([(1,), (10,)], "node long")
+        build = lambda: graphs.brandes_forward(edges, n_edges, seeds, 2, 10)
+        read = lambda out: ([sorted(f.collect()) for f in out[0]], out[1])
+        want = (
+            [
+                [(1, 1, 1), (10, 10, 1)],
+                [(1, 2, 1), (10, 11, 1), (10, 12, 1)],
+                [(1, 3, 1)],
+                [(1, 4, 1)],
+            ],
+            2 * 14,
+        )
+    else:
+        edges = olap_queries._bom_edges(spark, SF_SMOKE, 5)
+        build = lambda: olap_queries._bom_levels(
+            edges, "qty", 1, lambda q, w: q * w, "BOM explosion"
+        )
+        read = lambda df: sorted(df.collect())
+        maxpk = int(pd.read_parquet(f"{SF_SMOKE}/part.parquet")["p_partkey"].max())
+        want = _python_bom(maxpk, 5, 1, lambda q, w: q * w)
+
+    def probe(*_a, **_k):
+        raise AssertionError("probe job on a checkpointed frame")
+
+    with monkeypatch.context() as m:
+        for name in ("count", "isEmpty", "collect"):
+            # the session's concrete DataFrame class, which overrides
+            # the pyspark.sql.DataFrame methods
+            m.setattr(type(eu), name, probe)
+        out = build()
+    assert read(out) == want
+
+
+@pytest.mark.parametrize("depth", [3, 4])
+def test_bom_walk_depth_guard(spark, monkeypatch, depth):
+    """The BOM walk raises iff a level at its depth bound (64) is
+    non-empty; with the bound set to 4, a chain from root 1 whose last
+    node sits at depth 3 walks, and one at depth 4 raises."""
+    from tb_scale_spatial_data_pipeline_spark.plans import olap_queries
+
+    assert olap_queries._BOM_MAX_DEPTH == 64
+    monkeypatch.setattr(olap_queries, "_BOM_MAX_DEPTH", 4)
+    chain = [1, *range(100, 100 + depth)]
+    edges = spark.createDataFrame(
+        [(p, c, 1) for p, c in zip(chain, chain[1:])],
+        "parent bigint, child bigint, w bigint",
+    )
+
+    def walk():
+        return olap_queries._bom_levels(
+            edges, "qty", 1, lambda q, w: q * w, "BOM explosion"
+        )
+
+    if depth == 4:
+        with pytest.raises(RuntimeError, match="exceeded depth 4"):
+            walk()
+    else:
+        got = walk().where("root = 1").orderBy("depth").collect()
+        assert [(r.node, r.depth) for r in got] == list(zip(chain, range(4)))
+
+
+def test_functional_closure_empty_edges(spark):
+    """An empty edge set closes to nothing in 0 rounds."""
+    from tb_scale_spatial_data_pipeline_spark.operators.graphs import functional_closure
+
+    stats: dict = {}
+    got = functional_closure(
+        spark.createDataFrame([], "src bigint, dst bigint"), stats=stats
+    )
+    assert got.collect() == [] and stats["rounds"] == 0
+
+
+def test_probe_sources_pinned():
+    """No isEmpty() probe under plans/, and under operators/ only the
+    join probe functional_closure runs once its rounds are exhausted;
+    every other emptiness or size test reads a counted_checkpoint."""
+    import ast
+    import pathlib
+
+    import tb_scale_spatial_data_pipeline_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    hits = []
+    for sub in ("plans", "operators"):
+        for p in sorted((root / sub).glob("*.py")):
+            for fn in ast.walk(ast.parse(p.read_text())):
+                if isinstance(fn, ast.FunctionDef):
+                    hits += [
+                        f"{sub}/{p.name}::{fn.name}"
+                        for node in ast.walk(fn)
+                        if isinstance(node, ast.Attribute) and node.attr == "isEmpty"
+                    ]
+    assert hits == ["operators/graphs.py::functional_closure"]
 
 
 def test_no_inline_edge_symmetrization_in_plans():

@@ -77,7 +77,7 @@ def test_kendall_tau_b_matches_pair_enumeration(spark):
 
 def _edge_list(spark, weighted: bool):
     if weighted:
-        df = _weighted_edges(spark, SF_SMOKE).toPandas()
+        df = _weighted_edges(spark, SF_SMOKE)[0].toPandas()
         return list(zip(df["src"], df["dst"], df["w"]))
     df = _undirected_edges(spark, SF_SMOKE).toPandas()
     return list(zip(df["u"], df["v"]))
